@@ -17,8 +17,8 @@ Shape at 100 TB (the part that matters):
 3. The winning pair is applied as a pure-Column ``aggregate`` fold
    over each word's symbol array (greedy leftmost-first, proven
    equivalent to the scan form below) — a narrow map stage on the
-   word table, no shuffle. Lineage is truncated with localCheckpoint
-   per round.
+   word table, no shuffle. The rounds run on the plans/fixpoint.py
+   driver, which cuts the word table's lineage every round.
 
 Greedy-scan equivalence of the fold: the scan form (Sennrich's
 ``i += 2`` after a merge) never reconsiders a just-merged token as the
@@ -40,9 +40,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ophois_spark.plans.fixpoint import empty, fixpoint
+
 EOW = "</w>"
 BPE_MERGES = 12
-_TRUNC_EVERY = 16  # eager-checkpoint barrier cadence in bpe_train
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -89,8 +90,8 @@ def _merge_fold(sym, left: str, right: str):
     return F.aggregate(sym, F.array().cast("array<string>"), step)
 
 
-def _pair_counts(words: DataFrame, weight) -> DataFrame:
-    """(l, r, c): adjacent-pair counts of ``words`` with ``weight(n)``."""
+def _pair_counts(words: DataFrame) -> DataFrame:
+    """(l, r, c): adjacent-pair counts of ``words``, weighted by ``n``."""
     idx = F.sequence(F.lit(1), F.size("sym") - 1)
     return (
         words.filter(F.size("sym") >= 2)
@@ -104,92 +105,11 @@ def _pair_counts(words: DataFrame, weight) -> DataFrame:
                     ),
                 )
             ).alias("p"),
-            weight(F.col("n")).alias("w"),
+            "n",
         )
         .groupBy("p.l", "p.r")
-        .agg(F.sum("w").alias("c"))
+        .agg(F.sum("n").alias("c"))
     )
-
-
-def _contains_pair(left: str, right: str):
-    """Column predicate: sym has an adjacent (left, right) occurrence."""
-    idx = F.sequence(F.lit(1), F.size("sym") - 1)
-    return (F.size("sym") >= 2) & F.exists(
-        idx,
-        lambda i: (F.element_at("sym", i) == F.lit(left))
-        & (F.element_at("sym", i + 1) == F.lit(right)),
-    )
-
-
-def bpe_train_incremental(
-    docs: DataFrame, n_merges: int = BPE_MERGES, text_col: str = "text"
-) -> list[tuple[int, str, str]]:
-    """Incremental-pair-count BPE trainer — a MEASURED NEGATIVE RESULT,
-    kept as the documented alternative to the default ``bpe_train``.
-
-    Idea (the textbook single-node optimization): maintain the pair
-    counts across rounds and per round re-explode only the words that
-    CONTAIN the winning pair, subtracting their pre-merge pairs and
-    adding their post-merge pairs:
-
-        pc_{r+1} = pc_r  −  pairs(changed)  +  pairs(merge(changed))
-
-    Exactly equivalent to the full re-count by construction (unchanged
-    words contribute identical pairs to both sides; pinned against
-    ``bpe_train`` in tests/test_bpe.py on tie-heavy corpora).
-
-    Why it LOSES under Spark (measured on this host, one interleaved
-    session, identical outputs — see BENCH/BASELINE.md round-5 notes):
-    64 merges at 50k distinct words: 28.9 s vs 10.4 s scan; at 400k:
-    22.8 s vs 10.5 s; 16 merges at 2M words: 11.9 s vs 4.4 s. The full
-    re-count's explode+aggregate is whole-stage-codegen'd with map-side
-    combine, so its shuffle is only distinct-pair-sized regardless of
-    corpus, while the delta path pays 4 extra predicate scans of the
-    word table, two extra small shuffles, and a vocab-sized
-    filter+union rewrite per round — bookkeeping that costs more than
-    the arithmetic it saves at every scale testable here. The word-
-    table rewrite is vocab-sized in BOTH designs, so the asymptotics
-    don't diverge either. Kept because the delta bookkeeping is the
-    right base for a STREAMING vocabulary trainer (where no full
-    re-count is possible), and as the measured record of why the
-    default is the scan.
-    """
-    words = _initial_symbols(word_counts(docs, text_col)).localCheckpoint(
-        eager=False
-    )
-    n_part = words.rdd.getNumPartitions()
-    pc = _pair_counts(words, lambda n: n).localCheckpoint(eager=False)
-    merges: list[tuple[int, str, str]] = []
-    for r in range(n_merges):
-        best = pc.filter(F.col("c") > 0).orderBy(
-            F.desc("c"), F.asc("l"), F.asc("r")
-        ).limit(1).collect()
-        if not best:
-            break
-        left, right = best[0]["l"], best[0]["r"]
-        merges.append((r, left, right))
-        eager = (r + 1) % _TRUNC_EVERY == 0
-        changed = words.filter(_contains_pair(left, right))
-        merged = changed.select(
-            _merge_fold(F.col("sym"), left, right).alias("sym"), "n"
-        )
-        delta = _pair_counts(changed, lambda n: -n).unionByName(
-            _pair_counts(merged, lambda n: n)
-        )
-        pc = (
-            pc.unionByName(delta)
-            .groupBy("l", "r")
-            .agg(F.sum("c").alias("c"))
-            .filter(F.col("c") != 0)
-            .localCheckpoint(eager=eager)
-        )
-        words = (
-            words.filter(~_contains_pair(left, right))
-            .unionByName(merged)
-            .coalesce(n_part)
-            .localCheckpoint(eager=eager)
-        )
-    return merges
 
 
 def bpe_train(
@@ -206,32 +126,33 @@ def bpe_train(
     Per round: one explode of the word table's adjacent pairs into an
     algebraic map-side-combined aggregation (the shuffle is DISTINCT-
     PAIR-sized, not instance-sized), a 1-row argmax action, and a
-    narrow fold rewrite of the word table. This beat the incremental
-    delta design (``bpe_train_incremental``) at every measured scale —
-    50k/400k/2M distinct words — because whole-stage codegen makes the
-    re-count nearly free while the delta pays per-round bookkeeping
-    passes; measurements in the twin's docstring.
+    narrow fold rewrite of the word table. This beat an incremental
+    delta design (re-count only the words containing the winning pair)
+    at every measured scale — 50k/400k/2M distinct words — because
+    whole-stage codegen makes the re-count nearly free while the delta
+    pays per-round bookkeeping passes; measurements in
+    BENCH/BASELINE.md.
 
-    Loop hygiene: with one action per round, lazy localCheckpoints may
-    never get a job that truncates their serialized RDD graph — at 256
-    merges the task deserializer overflowed the stack near round ~150.
-    An eager checkpoint barrier every ``_TRUNC_EVERY`` rounds bounds
-    graph depth without paying an extra job every round.
+    The argmax ``collect`` is the round's single action; the loop ends
+    early when no pair is left (the fixpoint driver's emptiness rule
+    on the collected rows).
     """
     words = _initial_symbols(word_counts(docs, text_col)).localCheckpoint(
         eager=False
     )
     merges: list[tuple[int, str, str]] = []
-    for r in range(n_merges):
-        pairs = _pair_counts(words, lambda n: n)
+
+    def _round(state, cut):
+        words, _ = state
+        pairs = _pair_counts(words)
         best = pairs.orderBy(F.desc("c"), F.asc("l"), F.asc("r")).limit(1).collect()
-        if not best:
-            break
-        left, right = best[0]["l"], best[0]["r"]
-        merges.append((r, left, right))
-        words = words.select(
-            _merge_fold(F.col("sym"), left, right).alias("sym"), "n"
-        ).localCheckpoint(eager=(r + 1) % _TRUNC_EVERY == 0)
+        if best:
+            left, right = best[0]["l"], best[0]["r"]
+            merges.append((len(merges), left, right))
+            words = words.select(_merge_fold(F.col("sym"), left, right).alias("sym"), "n")
+        return words, best
+
+    fixpoint("bpe_train", (words, None), _round, stop=empty(of=1), rounds=n_merges)
     return merges
 
 

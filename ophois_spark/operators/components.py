@@ -5,17 +5,9 @@ the strictly largest component (src/heuristics.rs:10-58; ties broken by
 nondeterministic HashMap order — the engine breaks ties on the smallest
 component label, and the fixtures have a unique maximum).
 
-Spark-native algorithms (A/B pair, equivalence pinned on random
-graphs):
-
-- min-label propagation with pointer jumping (label := label(label)) —
-  ~O(log diameter) rounds; the default (measured faster at sf0.1,
-  see connected_components).
-- large-star/small-star contraction — O(log n) alternations regardless
-  of diameter; each round is a handful of shuffles over a shrinking
-  edge set. Kept as the comparator / high-diameter option.
-
-Lineage is truncated per round with localCheckpoint in both.
+Spark-native algorithm: min-label propagation with pointer jumping
+(label := label(label)) — ~O(log diameter) rounds, on the
+plans/fixpoint.py driver like every iterative operator here.
 """
 
 from __future__ import annotations
@@ -24,32 +16,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ophois_spark.operators.graph import StreetGraph
+from ophois_spark.plans.fixpoint import changed, fixpoint, recurs
 
 
 def connected_components(g: StreetGraph, max_iter: int = 60) -> DataFrame:
     """→ labels DataFrame (id, comp) where comp = min node id in
-    component. Default algorithm: min-label propagation with pointer
-    jumping — A/B-measured against large-star/small-star contraction at
-    sf0.1 (graph cached, interleaved reps): label-prop 8.1-8.6 s vs
-    star 11.0-14.0 s. Star converges in one fewer driver round (4 vs 5)
-    but each of its rounds rewrites the full edge relation through two
-    extra shuffles, while pointer jumping keeps label-prop's round
-    count ~O(log diameter) too — so fewer rounds does not buy wall
-    time here. ``connected_components_star`` remains available for
-    graphs where per-round edge contraction pays (very high diameter
-    with rapidly shrinking edge sets); equivalence of the two is pinned
-    on random graphs + a long chain by tests."""
-    return connected_components_labelprop(g, max_iter=max_iter)
-
-
-def connected_components_labelprop(g: StreetGraph, max_iter: int = 60) -> DataFrame:
-    """Min-label propagation + pointer jumping (O(log diameter) rounds)."""
+    component, by min-label propagation with pointer jumping. It won
+    its A/B against large-star/small-star contraction at sf0.1 (8.1-8.6
+    s vs 11.0-14.0 s; numbers in BENCH/BASELINE.md): star needs one
+    fewer round but rewrites the full edge relation through two extra
+    shuffles per round."""
     labels = g.nodes.select("id", F.col("id").alias("comp")).localCheckpoint(eager=True)
     edges_bi = g.edges.select("src", "dst").unionByName(
         g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
 
-    for _ in range(max_iter):
+    def _round(labels: DataFrame, cut) -> DataFrame:
+        labels = labels.select("id", "comp")
         # 1. neighbor-min: the smallest label among each node's neighbors
         neigh_min = (
             edges_bi.join(
@@ -65,7 +48,7 @@ def connected_components_labelprop(g: StreetGraph, max_iter: int = 60) -> DataFr
             F.col("comp").alias("prev"),
         )
         # 2. pointer jumping: comp := comp(comp) (labels are node ids)
-        flat = (
+        return (
             stepped.alias("s")
             .join(
                 labels.select(F.col("id").alias("comp"), F.col("comp").alias("comp2")).alias("m"),
@@ -78,91 +61,15 @@ def connected_components_labelprop(g: StreetGraph, max_iter: int = 60) -> DataFr
                 "prev",
             )
         )
-        flat = flat.localCheckpoint(eager=True)
-        changed = flat.filter(F.col("comp") != F.col("prev")).count()
-        labels = flat.select("id", "comp")
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
 
-
-def connected_components_star(g: StreetGraph, max_iter: int = 40) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the A/B alternative to the label-propagation +
-    pointer-jumping loop above.
-
-    large-star(u): every neighbor v > u re-links to m(u) = min(Γ(u) ∪
-    {u}); small-star(u): every neighbor v < u, and u itself, links to
-    m(u). Both preserve connectivity and node coverage (every edge is
-    emitted from exactly one endpoint; a node with no emission of its
-    own is re-emitted by a neighbor); at the fixpoint the edge set is a
-    forest of stars rooted at each component's minimum id, so the label
-    is just the neighbor-min. Convergence is checked with an
-    order-independent (count, xor-of-xxhash64) signature of the edge
-    set — one cheap aggregate action per round, no set-difference
-    shuffle. Expected O(log n) alternations independent of graph
-    DIAMETER — the label-prop loop needs O(log diameter) rounds, so on
-    high-diameter street chains the star loop converges in fewer driver
-    rounds (each round costs more shuffles; bench at your scale).
-    """
-    e = (
-        g.edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    labels, _ = fixpoint(
+        "connected_components",
+        labels,
+        _round,
+        stop=changed(F.col("comp") != F.col("prev")),
+        max_rounds=max_iter,
     )
-
-    def _sig(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("h")
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    def _bidir(df: DataFrame) -> DataFrame:
-        return df.unionByName(df.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-    def _mins(bidir: DataFrame) -> DataFrame:
-        return bidir.groupBy("u").agg(
-            F.least(F.col("u"), F.min("v")).alias("m")
-        )
-
-    sig = _sig(e)
-    for _ in range(max_iter):
-        # large-star: (u,v) with v > u  →  (v, m(u))
-        b = _bidir(e)
-        ls = (
-            b.filter(F.col("v") > F.col("u"))
-            .join(_mins(b), "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: (u,v) with v < u → (v, m(u));  plus (u, m(u))
-        b2 = _bidir(ls)
-        m2 = _mins(b2)
-        ss = (
-            b2.filter(F.col("v") < F.col("u"))
-            .join(m2, "u")
-            .select(F.col("v").alias("u"), "m")
-            .unionByName(m2.select("u", "m"))
-            .select(F.col("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        new_sig = _sig(ss)
-        e = ss
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(f"star contraction did not converge in {max_iter} rounds")
-
-    nbr_min = _bidir(e).groupBy("u").agg(F.min("v").alias("mv"))
-    return g.nodes.select("id").join(
-        nbr_min.withColumnRenamed("u", "id"), "id", "left"
-    ).select("id", F.least(F.col("id"), F.coalesce("mv", "id")).alias("comp"))
+    return labels.select("id", "comp")
 
 
 def component_size_distribution(labels: DataFrame) -> DataFrame:
@@ -217,34 +124,33 @@ def kcore(
     per input split) and two left-semi joins filtering the edge
     relation, all on the same src/dst keys (bucketing the edges makes
     them co-located); the edge set only shrinks. One count action per
-    round; lineage truncated per round with localCheckpoint.
+    round; lineage cut per round by the fixpoint driver.
     """
     e = edges.select("src", "dst").localCheckpoint(eager=False)
-    n_prev = None
-    rounds = 0
-    while True:
+
+    def _round(state, cut):
+        e, _ = state
         deg = (
             e.select(F.col("src").alias("id"))
             .unionByName(e.select(F.col("dst").alias("id")))
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        keep = deg.filter(F.col("d") >= k).select("id").localCheckpoint(eager=False)
-        n = keep.count()  # the round's single action
-        if n == n_prev:
-            return keep, rounds
-        if n == 0:
-            return keep, rounds + 1
-        n_prev = n
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(f"k-core did not converge within {max_rounds} rounds")
+        keep = cut(deg.filter(F.col("d") >= k).select("id"))
         e = (
             e.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
             .select("src", "dst")
-            .localCheckpoint(eager=False)
         )
+        return e, keep
+
+    # the survivor count is the round's single action; the round that
+    # repeats it peeled nothing and is not counted (an empty core
+    # repeats one round after the peel that emptied it)
+    (_, keep), rounds = fixpoint(
+        "kcore", (e, None), _round, stop=recurs(of=1), max_rounds=max_rounds + 1
+    )
+    return keep, rounds - 1
 
 
 def coreness(
@@ -341,8 +247,8 @@ def ktruss(edges: DataFrame, k: int, max_rounds: int = 100) -> tuple[DataFrame, 
     counts drops in unchanged if id order correlates with degree —
     with the same output, since support is orientation-free). Each
     round: one wedge equi-join + one left-semi closure + one algebraic
-    count + one inner join back, one count action, lineage truncated
-    with localCheckpoint; the edge relation only shrinks.
+    count + one inner join back, one count action, lineage cut by the
+    fixpoint driver; the edge relation only shrinks.
     """
     e = (
         edges.select(
@@ -351,21 +257,17 @@ def ktruss(edges: DataFrame, k: int, max_rounds: int = 100) -> tuple[DataFrame, 
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n_prev = None
-    rounds = 0
-    while True:
-        sup = _edge_support(e)
-        keep = sup.filter(F.col("support") >= k - 2).localCheckpoint(eager=False)
-        n = keep.count()  # the round's single action
-        if n == n_prev:
-            return keep, rounds
-        if n == 0:
-            return keep.select("src", "dst", "support"), rounds + 1
-        n_prev = n
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(f"k-truss did not converge within {max_rounds} rounds")
-        e = keep.select("src", "dst").localCheckpoint(eager=False)
+
+    def _round(keep: DataFrame, cut) -> DataFrame:
+        sup = _edge_support(keep.select("src", "dst"))
+        return sup.filter(F.col("support") >= k - 2)
+
+    # as in kcore: the surviving-edge count is the single action and
+    # the repeating round is not counted
+    keep, rounds = fixpoint(
+        "ktruss", e, _round, stop=recurs(), max_rounds=max_rounds + 1
+    )
+    return keep, rounds - 1
 
 
 def lpa_communities(nodes: DataFrame, edges: DataFrame, rounds: int = 4) -> DataFrame:
@@ -401,7 +303,8 @@ def lpa_communities(nodes: DataFrame, edges: DataFrame, rounds: int = 4) -> Data
         sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=False)
     labels = nodes.select(F.col("id"), F.col("id").cast("long").alias("label"))
-    for _ in range(rounds):
+
+    def _round(labels: DataFrame, cut) -> DataFrame:
         nbr = (
             adj.join(
                 labels.select(F.col("id").alias("dst"), F.col("label").alias("nlbl")),
@@ -413,9 +316,9 @@ def lpa_communities(nodes: DataFrame, edges: DataFrame, rounds: int = 4) -> Data
         best = nbr.groupBy("id").agg(
             F.min(F.struct((-F.col("c")).alias("nc"), F.col("nlbl").alias("lbl"))).alias("b")
         )
-        labels = (
-            labels.join(best, "id", "left")
-            .select("id", F.coalesce(F.col("b.lbl"), F.col("label")).alias("label"))
-            .localCheckpoint(eager=False)
+        return labels.join(best, "id", "left").select(
+            "id", F.coalesce(F.col("b.lbl"), F.col("label")).alias("label")
         )
+
+    labels, _ = fixpoint("lpa_communities", labels, _round, rounds=rounds)
     return labels

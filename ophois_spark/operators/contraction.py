@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ophois_spark.functions import fmt_f64, midpoint_xy
 from ophois_spark.operators.graph import StreetGraph
+from ophois_spark.plans.fixpoint import empty, fixpoint
 
 
 def replace_nodes_by_links(g: StreetGraph, victims: DataFrame) -> StreetGraph:
@@ -122,28 +123,34 @@ def remove_under_delta_nodes(g: StreetGraph, delta: float, max_iter: int = 100) 
     an order-insensitive fixpoint, which this loop reaches
     deterministically.
     """
-    g = g.checkpointed()  # round-1 jobs must not re-derive the input lineage
-    for _ in range(max_iter):
-        # eager-checkpoint the candidate set: it is tiny, but its
-        # pipeline (dist join + agg) would otherwise re-evaluate in
-        # every consumer below (emptiness probe + nodes checkpoint +
-        # edges checkpoint = 3 recomputes per round)
+
+    def _round(state, cut):
+        # contract the previous round's selection, then select again
+        g, selected = state
+        if selected is not None:
+            g = cut(replace_nodes_by_links(g, selected))
         cand = (
             _max_incident_dist(g)
             .filter(F.col("max_dist").isNull() | (F.col("max_dist") <= delta))
             .select("id")
-            .localCheckpoint(eager=True)
         )
-        if cand.isEmpty():
-            return g
         # exclude the greater endpoint of every candidate-candidate edge
         cand_edges = g.edges.join(
             cand.withColumnRenamed("id", "src"), "src", "left_semi"
         ).join(cand.withColumnRenamed("id", "dst"), "dst", "left_semi")
         losers = cand_edges.select(F.col("dst").alias("id")).distinct()
-        selected = cand.join(losers, "id", "left_anti").localCheckpoint(eager=True)
-        g = replace_nodes_by_links(g, selected).checkpointed()
-    raise RuntimeError(f"remove_under_delta_nodes did not converge in {max_iter} rounds")
+        # the smallest candidate never loses: empty iff no candidates
+        return g, cand.join(losers, "id", "left_anti")
+
+    # the input is cut once so round 1 does not re-derive its lineage
+    (g, _), _ = fixpoint(
+        "remove_under_delta_nodes",
+        (g.checkpoint(), None),
+        _round,
+        stop=empty(of=1),
+        max_rounds=max_iter,
+    )
+    return g
 
 
 def contract_edges(g: StreetGraph, matching: DataFrame) -> StreetGraph:
@@ -216,21 +223,17 @@ def remove_under_delta_links(g: StreetGraph, delta: float, max_iter: int = 100) 
     endpoints. Newly minted midpoint nodes can create new short links,
     so reconverge until none remain — the reference's outer while-loop.
     """
-    g = g.checkpointed()  # round-1 jobs must not re-derive the input lineage
-    for _ in range(max_iter):
-        # short-link set and matching are tiny: eager-checkpoint them so
-        # the dist join / window pipeline runs once per round instead of
-        # re-evaluating under every downstream job (emptiness probe +
-        # the two graph-checkpoint jobs, each referencing the matching
-        # several times through contract_edges)
+
+    def _round(state, cut):
+        # contract the previous round's matching, then match again
+        g, matching = state
+        if matching is not None:
+            g = cut(contract_edges(g, matching))
         short = (
             g.edges_with_coords()
             .filter(F.col("dist_m") < delta)
             .select("src", "dst", "dist_m")
-            .localCheckpoint(eager=True)
         )
-        if short.isEmpty():
-            return g
         key = F.struct(F.col("dist_m"), F.col("src"), F.col("dst"))
         ends = short.withColumn("k", key).select(
             F.explode(F.array("src", "dst")).alias("endpoint"), "src", "dst", "k"
@@ -239,13 +242,22 @@ def remove_under_delta_links(g: StreetGraph, delta: float, max_iter: int = 100) 
         local_min = ends.withColumn("kmin", F.min("k").over(w)).filter(
             F.col("k") == F.col("kmin")
         )
-        # selected at BOTH endpoints
+        # selected at BOTH endpoints; the global minimum always is, so
+        # the matching is empty iff no short link remains
         matching = (
             local_min.groupBy("src", "dst")
             .agg(F.count(F.lit(1)).alias("c"))
             .filter(F.col("c") == 2)
             .select("src", "dst")
-            .localCheckpoint(eager=True)
         )
-        g = contract_edges(g, matching).checkpointed()
-    raise RuntimeError(f"remove_under_delta_links did not converge in {max_iter} rounds")
+        return g, matching
+
+    # the input is cut once so round 1 does not re-derive its lineage
+    (g, _), _ = fixpoint(
+        "remove_under_delta_links",
+        (g.checkpoint(), None),
+        _round,
+        stop=empty(of=1),
+        max_rounds=max_iter,
+    )
+    return g

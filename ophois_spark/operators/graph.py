@@ -99,10 +99,6 @@ class StreetGraph:
             )
         )
 
-    def checkpointed(self) -> "StreetGraph":
-        """Truncate lineage between fixpoint iterations (driver loops)."""
-        return StreetGraph(self.nodes.localCheckpoint(eager=True), self.edges.localCheckpoint(eager=True))
-
     def counts(self) -> tuple[int, int]:
         return self.nodes.count(), self.edges.count()
 

@@ -43,13 +43,13 @@ Scale shape at 10^10 edges: the edge relation is touched once per
 round by two hash joins on endpoint keys (bucketed storage co-locates
 them, sources/bucketed.py); the per-round aggregation output is one
 row per component, shrinking at least geometrically; the pointer
-tables live on component keys only. Lineage is truncated per round
-with plans.barrier.stats_barrier rather than plain localCheckpoint:
-the pointer-doubling self-joins compound Catalyst's product-of-
-children size estimate into a BigInt whose bit-length doubles per
-jump (minutes of driver CPU by round 4 at sf0.01, then OOM — see
-barrier.py for the jstack evidence), and the barrier resets the
-estimate at every checkpoint.
+tables live on component keys only. Both loops run on the
+plans/fixpoint.py driver, whose per-round ``stats_barrier`` matters
+most here: the pointer-doubling self-joins compound Catalyst's
+product-of-children size estimate into a BigInt whose bit-length
+doubles per jump (minutes of driver CPU by round 4 at sf0.01, then
+OOM — see fixpoint.py for the jstack evidence), and the barrier resets
+the estimate every round.
 """
 
 from __future__ import annotations
@@ -57,7 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ophois_spark.plans.barrier import stats_barrier
+from ophois_spark.plans.fixpoint import changed, empty, fixpoint, stats_barrier
 
 
 def minimum_spanning_forest(
@@ -75,87 +75,81 @@ def minimum_spanning_forest(
         .filter(F.col("src") != F.col("dst"))
         .transform(stats_barrier)
     )
-    comp = nodes.select("id", F.col("id").alias("comp")).transform(stats_barrier)
     msf_parts: list[DataFrame] = []
 
-    for _ in range(max_rounds):
-        x = (
-            e.join(
-                comp.select(F.col("id").alias("src"), F.col("comp").alias("ca")), "src"
-            )
-            .join(
-                comp.select(F.col("id").alias("dst"), F.col("comp").alias("cb")), "dst"
-            )
-            .filter(F.col("ca") != F.col("cb"))
-            .transform(stats_barrier)
+    def _double(s: DataFrame, cut) -> DataFrame:
+        s = s.select("comp", "s")
+        return (
+            s.alias("a")
+            .join(s.select(F.col("comp").alias("s"), F.col("s").alias("s2")).alias("b"), "s")
+            .select("comp", F.col("s2").alias("s"), F.col("s").alias("prev"))
         )
-        if x.isEmpty():
-            break
-        cand = x.select(
-            F.col("ca").alias("comp"), "src", "dst", "w", F.col("cb").alias("other")
-        ).unionByName(
-            x.select(
-                F.col("cb").alias("comp"), "src", "dst", "w", F.col("ca").alias("other")
-            )
-        )
-        chosen = (
-            cand.groupBy("comp")
-            .agg(F.min(F.struct("w", "src", "dst", "other")).alias("m"))
-            .select("comp", "m.src", "m.dst", "m.w", "m.other")
-            .transform(stats_barrier)
-        )
-        msf_parts.append(chosen.select("src", "dst", "w").distinct())
 
-        # successor pseudoforest; only 2-cycles exist — root the smaller id
-        s0 = chosen.select("comp", F.col("other").alias("s"))
-        s = (
-            s0.alias("a")
-            .join(
-                s0.select(F.col("comp").alias("s"), F.col("s").alias("ss")).alias("b"),
-                "s",
-            )
-            .select(
-                "comp",
-                F.when(
-                    (F.col("ss") == F.col("comp")) & (F.col("comp") < F.col("s")),
-                    F.col("comp"),
+    def _round(state, cut):
+        # merge along the previous round's cross edges, then find the
+        # cross edges of the merged components
+        comp, x = state
+        if x is not None:
+            cand = x.select(
+                F.col("ca").alias("comp"), "src", "dst", "w", F.col("cb").alias("other")
+            ).unionByName(
+                x.select(
+                    F.col("cb").alias("comp"), "src", "dst", "w", F.col("ca").alias("other")
                 )
-                .otherwise(F.col("s"))
-                .alias("s"),
             )
-        )
-        allc = comp.select("comp").distinct()
-        s = (
-            allc.join(s, "comp", "left")
-            .select("comp", F.coalesce("s", F.col("comp")).alias("s"))
-            .transform(stats_barrier)
-        )
-        # pointer doubling to the rooted fixpoint (s∘s == s)
-        for _ in range(max_jump):
-            s2 = (
-                s.alias("a")
+            chosen = cut(
+                cand.groupBy("comp")
+                .agg(F.min(F.struct("w", "src", "dst", "other")).alias("m"))
+                .select("comp", "m.src", "m.dst", "m.w", "m.other")
+            )
+            msf_parts.append(chosen.select("src", "dst", "w").distinct())
+
+            # successor pseudoforest; only 2-cycles exist — root the smaller id
+            s0 = chosen.select("comp", F.col("other").alias("s"))
+            s = (
+                s0.alias("a")
                 .join(
-                    s.select(F.col("comp").alias("s"), F.col("s").alias("s2")).alias(
-                        "b"
-                    ),
+                    s0.select(F.col("comp").alias("s"), F.col("s").alias("ss")).alias("b"),
                     "s",
                 )
-                .select("comp", F.col("s2").alias("s"), F.col("s").alias("prev"))
-                .transform(stats_barrier)
+                .select(
+                    "comp",
+                    F.when(
+                        (F.col("ss") == F.col("comp")) & (F.col("comp") < F.col("s")),
+                        F.col("comp"),
+                    )
+                    .otherwise(F.col("s"))
+                    .alias("s"),
+                )
             )
-            changed = s2.filter(F.col("s") != F.col("prev")).count()
-            s = s2.select("comp", "s")
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(f"pointer doubling did not root in {max_jump} steps")
-        comp = (
-            comp.join(s.select("comp", F.col("s").alias("newc")), "comp")
-            .select("id", F.col("newc").alias("comp"))
-            .transform(stats_barrier)
+            allc = comp.select("comp").distinct()
+            s = cut(
+                allc.join(s, "comp", "left").select(
+                    "comp", F.coalesce("s", F.col("comp")).alias("s")
+                )
+            )
+            # pointer doubling to the rooted fixpoint (s∘s == s)
+            s, _ = fixpoint(
+                "pointer doubling",
+                s,
+                _double,
+                stop=changed(F.col("s") != F.col("prev")),
+                max_rounds=max_jump,
+            )
+            comp = cut(
+                comp.join(s.select("comp", F.col("s").alias("newc")), "comp").select(
+                    "id", F.col("newc").alias("comp")
+                )
+            )
+        x = (
+            e.join(comp.select(F.col("id").alias("src"), F.col("comp").alias("ca")), "src")
+            .join(comp.select(F.col("id").alias("dst"), F.col("comp").alias("cb")), "dst")
+            .filter(F.col("ca") != F.col("cb"))
         )
-    else:
-        raise RuntimeError(f"Boruvka did not converge in {max_rounds} rounds")
+        return comp, x
+
+    comp = nodes.select("id", F.col("id").alias("comp")).transform(stats_barrier)
+    fixpoint("Boruvka", (comp, None), _round, stop=empty(of=1), max_rounds=max_rounds)
 
     if not msf_parts:
         # Empty forest: derive the schema from the input edge relation so

@@ -117,7 +117,9 @@ def decode_audio(payload: bytes) -> "np.ndarray":
     ``fmt `` chunk declaring format 1 (integer PCM) at 16 bits, then
     returns the ``data`` chunk as little-endian int16. Raises
     ``ValueError`` for anything else (MP3/AAC/float WAV still need
-    external codecs and remain out of scope in this sandbox).
+    external codecs and remain out of scope in this sandbox) and for a
+    malformed file: a chunk whose declared size runs past the payload,
+    a ``fmt `` chunk after ``data``, or a ``data`` chunk of odd length.
     """
     if len(payload) < 44 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
@@ -126,13 +128,19 @@ def decode_audio(payload: bytes) -> "np.ndarray":
         cid = payload[pos : pos + 4]
         size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
         body = payload[pos + 8 : pos + 8 + size]
+        if len(body) != size:
+            raise ValueError(f"truncated WAV {cid!r} chunk ({len(body)} of {size} bytes)")
         if cid == b"fmt ":
+            if data is not None:
+                raise ValueError("WAV fmt chunk after the data chunk")
             audio_fmt = int.from_bytes(body[0:2], "little")
             bits = int.from_bytes(body[14:16], "little")
             if audio_fmt != 1 or bits != 16:
                 raise ValueError(f"unsupported WAV (fmt={audio_fmt}, bits={bits})")
             fmt_ok = True
         elif cid == b"data":
+            if size % 2:
+                raise ValueError(f"odd-length PCM16 data chunk ({size} bytes)")
             data = body
         pos += 8 + size + (size & 1)  # chunks are word-aligned
     if not fmt_ok or data is None:

@@ -28,10 +28,9 @@ loop runs max-recursion-depth times (<= interior vertex count of the
 longest way; O(log L) on typical geometry), never once per segment.
 Per round: ONE window shuffle keyed (way_id, lo, hi) — fine-grained
 keys, so a mega-way's segments spread across tasks — plus one equi-join
-of the shrinking active set against the (small) split set. Lineage is
-truncated per round with lazy localCheckpoint, the same discipline as
-every iterative operator here (components.py, contraction.py), and each
-round costs exactly one Spark action (the emptiness probe).
+of the shrinking active set against the (small) split set. The rounds
+run on the plans/fixpoint.py driver like every iterative operator here,
+and each round costs exactly one Spark action (the emptiness probe).
 
 Scale shape at 10^12 vertices: work per round is linear in the
 still-active vertex count, which only shrinks (every active segment
@@ -47,6 +46,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ophois_spark.plans.fixpoint import empty, fixpoint
 
 _DEC = "decimal(38,0)"
 
@@ -120,13 +121,10 @@ def rdp_simplify(
         F.col("lhs").desc(), F.col("seq")
     )
     kept_parts = [kept_ends]
-    rounds = 0
-    while cur.count() > 0:  # one action per round; materializes the checkpoint
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(f"rdp did not terminate within {max_rounds} rounds")
+
+    def _round(cur: DataFrame, cut) -> DataFrame:
         scored = cur.select("*", lhs.alias("lhs"), rhs.alias("rhs"))
-        top = (
+        top = cut(
             scored.withColumn("rn", F.row_number().over(w))
             .filter((F.col("rn") == 1) & (F.col("lhs") > F.col("rhs")))
             .select(
@@ -137,7 +135,6 @@ def rdp_simplify(
                 F.col("x").alias("sx"),
                 F.col("y").alias("sy"),
             )
-            .localCheckpoint(eager=False)
         )
         kept_parts.append(
             top.select(
@@ -148,7 +145,7 @@ def rdp_simplify(
             )
         )
         before = F.col("seq") < F.col("s_seq")
-        cur = (
+        return (
             scored.join(top, ["way_id", "lo", "hi"])
             .filter(F.col("seq") != F.col("s_seq"))
             .select(
@@ -163,6 +160,15 @@ def rdp_simplify(
                 F.when(before, F.col("sx")).otherwise(F.col("bx")).alias("bx"),
                 F.when(before, F.col("sy")).otherwise(F.col("bby")).alias("bby"),
             )
-            .localCheckpoint(eager=False)
         )
+
+    # the emptiness probe on the active set is the round's one action
+    _, rounds = fixpoint(
+        "rdp_simplify",
+        cur,
+        _round,
+        stop=empty(),
+        max_rounds=max_rounds,
+        check_start=True,
+    )
     return reduce(DataFrame.unionByName, kept_parts), rounds

@@ -8,10 +8,10 @@ Spark-native form is level-synchronous relational iteration:
 - ``bfs_hops``: per round ONE equi-join (frontier × bidirectional
   edges) + one anti-join against the settled set — the frontier, never
   the graph, is the per-round shuffle payload, so at 10^12 scale each
-  round's cost tracks the expanding wavefront rather than |E|. Lineage
-  is cut per round with an eager localCheckpoint (the components /
-  contraction discipline) and the early-exit emptiness check is the
-  round's single cheap action.
+  round's cost tracks the expanding wavefront rather than |E|. The
+  rounds run on the plans/fixpoint.py driver (lineage cut per round)
+  and the early-exit emptiness check is the round's single cheap
+  action.
 
 - ``bounded_dist_m``: the same loop relaxing INTEGER metre weights
   (floor(haversine) per edge). Integer min-plus is bit-replayable and
@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ophois_spark.operators.graph import StreetGraph
+from ophois_spark.plans.fixpoint import empty, fixpoint, recurs
 
 
 def _bidirectional(edges: DataFrame, extra: list[str] | None = None) -> DataFrame:
@@ -55,20 +56,24 @@ def bfs_hops(g: StreetGraph, seeds: DataFrame, max_hops: int = 8) -> DataFrame:
         .withColumn("hops", F.lit(0).cast("int"))
         .localCheckpoint(eager=True)
     )
-    frontier = settled.select("id")
-    for h in range(1, max_hops + 1):
-        nxt = (
+
+    def _round(state, cut):
+        settled, frontier, h = state
+        frontier = frontier.select("id")
+        nxt = cut(
             frontier.join(bi, frontier["id"] == bi["a"])
             .select(F.col("b").alias("id"))
             .distinct()
             .join(settled.select("id"), "id", "left_anti")
-            .withColumn("hops", F.lit(h).cast("int"))
-            .localCheckpoint(eager=True)
+            .withColumn("hops", F.lit(h + 1).cast("int"))
         )
-        if nxt.isEmpty():
-            break
-        settled = settled.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("id")
+        return settled.unionByName(nxt), nxt, h + 1
+
+    # an empty new frontier adds nothing, so the settled set it was
+    # unioned into is final
+    (settled, _, _), _ = fixpoint(
+        "bfs_hops", (settled, settled, 0), _round, stop=empty(of=1), rounds=max_hops
+    )
     return settled
 
 
@@ -96,29 +101,20 @@ def bounded_dist_m(g: StreetGraph, seeds: DataFrame, max_hops: int = 4) -> DataF
         .localCheckpoint(eager=True)
     )
 
-    def _sig(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("dist_m").alias("s"),
-            F.bit_xor(F.xxhash64("id", "dist_m")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["s"], row["h"])
-
-    sig = _sig(dist)
-    for _ in range(max_hops):
+    def _round(dist: DataFrame, cut) -> DataFrame:
         relaxed = dist.join(bi, dist["id"] == bi["a"]).select(
             F.col("b").alias("id"), (F.col("dist_m") + F.col("w")).alias("dist_m")
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist_m").alias("dist_m"))
-            .localCheckpoint(eager=True)
-        )
-        new_sig = _sig(dist)
-        if new_sig == sig:
-            break
-        sig = new_sig
+        return dist.unionByName(relaxed).groupBy("id").agg(F.min("dist_m").alias("dist_m"))
+
+    dist, _ = fixpoint(
+        "bounded_dist_m",
+        dist,
+        _round,
+        stop=recurs("id", "dist_m", total="dist_m"),
+        rounds=max_hops,
+        check_start=True,
+    )
     return dist
 
 

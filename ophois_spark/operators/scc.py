@@ -45,10 +45,8 @@ transitive-closure oracle with no round pinning.
 Scale shape at 10^9 hosts: every round is equi-joins + algebraic
 min/max/count aggregations on (id)/(src)/(dst) — bucketing the edge
 relation by src (sources/bucketed.py) co-locates the propagation
-joins; the remaining relation shrinks monotonically and is
-localCheckpoint-truncated per round like every iterative operator
-here. Remaining-set cardinality is tracked arithmetically from the
-per-round convergence counts, so no extra count actions are spent.
+joins; the remaining relation shrinks monotonically, and every loop runs
+on the plans/fixpoint.py driver like every iterative operator here.
 Worst-case round count is the SCC-DAG depth (a pure chain); real web
 graphs have shallow condensations (Broder's bowtie), which is the
 case this engine targets — the max_rounds cap makes the pathological
@@ -60,14 +58,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ophois_spark.plans.fixpoint import changed, empty, fixpoint, recurs
+
 
 def _fused_fixpoint(labels: DataFrame, edges: DataFrame, max_iter: int) -> DataFrame:
     """Iterate f(v) := min(f(v), min over successors' f) and
     b(v) := min(b(v), min over predecessors' b) together to the joint
-    fixpoint. labels: (id, f, b); edges: (src, dst). One checkpoint +
-    one convergence count per round (components.py protocol)."""
-    labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    fixpoint. labels: (id, f, b); edges: (src, dst). One convergence
+    count per round (components.py protocol)."""
+
+    def _round(labels: DataFrame, cut) -> DataFrame:
         fmin = (
             edges.join(
                 labels.select(F.col("id").alias("dst"), F.col("f").alias("nf")), "dst"
@@ -84,7 +84,7 @@ def _fused_fixpoint(labels: DataFrame, edges: DataFrame, max_iter: int) -> DataF
             .agg(F.min("nb").alias("nb"))
             .withColumnRenamed("dst", "id")
         )
-        stepped = (
+        return (
             labels.join(fmin, "id", "left")
             .join(bmin, "id", "left")
             .select(
@@ -95,14 +95,34 @@ def _fused_fixpoint(labels: DataFrame, edges: DataFrame, max_iter: int) -> DataF
                 F.col("b").alias("pb"),
             )
         )
-        stepped = stepped.localCheckpoint(eager=True)
-        changed = stepped.filter(
-            (F.col("f") != F.col("pf")) | (F.col("b") != F.col("pb"))
-        ).count()
-        labels = stepped.select("id", "f", "b")
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"min-label propagation did not converge in {max_iter} rounds")
+
+    labels, _ = fixpoint(
+        "min-label propagation",
+        labels.select("id", "f", "b"),
+        _round,
+        stop=changed((F.col("f") != F.col("pf")) | (F.col("b") != F.col("pb"))),
+        max_rounds=max_iter,
+    )
+    return labels.select("id", "f", "b")
+
+
+def _trim_round(state, cut):
+    """One trim level: keep the nodes with both an in- and an out-edge
+    inside the remaining subgraph, and the edges between them."""
+    _, rem_edges = state
+    deg = (
+        rem_edges.select(F.col("src").alias("id"), F.lit(1).alias("o"), F.lit(0).alias("i"))
+        .unionByName(
+            rem_edges.select(F.col("dst").alias("id"), F.lit(0).alias("o"), F.lit(1).alias("i"))
+        )
+        .groupBy("id")
+        .agg(F.max("o").alias("o"), F.max("i").alias("i"))
+    )
+    alive = cut(deg.filter((F.col("o") == 1) & (F.col("i") == 1)).select("id"))
+    rem_edges = rem_edges.join(alive.withColumnRenamed("id", "src"), "src", "left_semi").join(
+        alive.withColumnRenamed("id", "dst"), "dst", "left_semi"
+    )
+    return alive, rem_edges
 
 
 def strongly_connected_components(
@@ -122,78 +142,42 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n_rem = remaining.count()
     settled: list[DataFrame] = []
 
-    def _trim_phase() -> None:
-        """Peel the acyclic fringe level by level; settle the whole
-        trimmed set as singletons in one batch at phase end."""
-        nonlocal remaining, rem_edges, n_rem
-        pre = remaining
-        for _ in range(max_trim):
-            deg = (
-                rem_edges.select(
-                    F.col("src").alias("id"), F.lit(1).alias("o"), F.lit(0).alias("i")
-                )
-                .unionByName(
-                    rem_edges.select(
-                        F.col("dst").alias("id"), F.lit(0).alias("o"), F.lit(1).alias("i")
-                    )
-                )
-                .groupBy("id")
-                .agg(F.max("o").alias("o"), F.max("i").alias("i"))
-            )
-            alive = (
-                deg.filter((F.col("o") == 1) & (F.col("i") == 1))
-                .select("id")
-                .localCheckpoint(eager=True)
-            )
-            n_alive = alive.count()
-            if n_alive == n_rem:
-                break
-            rem_edges = (
-                rem_edges.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            remaining, n_rem = alive, n_alive
-            if n_rem == 0:
-                break
-        else:
-            raise RuntimeError(f"trim did not stabilize in {max_trim} levels")
-        if pre is not remaining:
-            settled.append(
-                pre.join(remaining, "id", "left_anti").select(
-                    "id", F.col("id").alias("scc")
-                )
-            )
-
-    for _ in range(max_rounds):
-        _trim_phase()
-        if n_rem == 0:
-            break
-        base = remaining.select(
-            "id", F.col("id").alias("f"), F.col("id").alias("b")
+    def _peel_round(state, cut):
+        remaining, rem_edges = state
+        # trim the acyclic fringe level by level until the remaining
+        # set stops shrinking; the trimmed set settles as singletons
+        (alive, rem_edges), _ = fixpoint(
+            "SCC trim",
+            state,
+            _trim_round,
+            stop=recurs(of=0),
+            max_rounds=max_trim,
+            check_start=True,
         )
+        settled.append(
+            remaining.join(alive, "id", "left_anti").select("id", F.col("id").alias("scc"))
+        )
+        base = alive.select("id", F.col("id").alias("f"), F.col("id").alias("b"))
         lab = _fused_fixpoint(base, rem_edges, max_iter=max_prop)
-        done = (
-            lab.filter(F.col("f") == F.col("b"))
-            .select("id", F.col("f").alias("scc"))
-            .localCheckpoint(eager=True)
-        )
-        n_done = done.count()
+        done = cut(lab.filter(F.col("f") == F.col("b")).select("id", F.col("f").alias("scc")))
         settled.append(done)
-        n_rem -= n_done
-        if n_rem == 0:
-            break
-        remaining = remaining.join(done, "id", "left_anti").localCheckpoint(eager=True)
-        rem_edges = (
-            rem_edges.join(done.select(F.col("id").alias("src")), "src", "left_anti")
-            .join(done.select(F.col("id").alias("dst")), "dst", "left_anti")
-            .localCheckpoint(eager=True)
+        return (
+            alive.join(done, "id", "left_anti"),
+            rem_edges.join(done.select(F.col("id").alias("src")), "src", "left_anti").join(
+                done.select(F.col("id").alias("dst")), "dst", "left_anti"
+            ),
         )
-    else:
-        raise RuntimeError(f"SCC peeling did not converge in {max_rounds} rounds")
+
+    fixpoint(
+        "SCC peeling",
+        (remaining, rem_edges),
+        _peel_round,
+        stop=empty(of=0),
+        max_rounds=max_rounds,
+        check_start=True,
+    )
     out = settled[0]
     for part in settled[1:]:
         out = out.unionByName(part)

@@ -26,9 +26,8 @@ the edges by src makes every iteration's join co-located (zero
 exchange on the big side, see sources/bucketed.py); out-degrees fold
 into the edge relation ONCE before the loop instead of re-joining per
 iteration; hot dst nodes (the skew case: everyone links to the hub)
-collapse map-side because the dst aggregation is algebraic. Lineage is
-truncated per round with localCheckpoint like every iterative operator
-here.
+collapse map-side because the dst aggregation is algebraic. The rounds
+run on the plans/fixpoint.py driver like every iterative operator here.
 """
 
 from __future__ import annotations
@@ -36,13 +35,59 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ophois_spark.plans.fixpoint import fixpoint, recurs, within
+
 PAGERANK_SCALE = 1_000_000
 PAGERANK_ITERS = 5
 DAMPING_NUM = 85
 DAMPING_DEN = 100
 
 
-PAGERANK_MAX_ROUNDS = 200  # safety cap for the convergence loop
+PAGERANK_MAX_ROUNDS = 200  # safety cap for the convergence loops
+PAGERANK_FLOAT_TOL = 1e-6
+
+
+def _integer_arith(scale: int) -> tuple:
+    """(start, contribution, new rank) Columns of the integer round."""
+    base = (DAMPING_DEN - DAMPING_NUM) * scale // DAMPING_DEN
+    new = F.lit(base) + F.expr(f"({DAMPING_NUM} * coalesce(s, 0L)) div {DAMPING_DEN}")
+    return F.lit(scale).cast("long"), F.expr("rank div outdeg"), new.cast("long")
+
+
+def _double_arith(damping: float) -> tuple:
+    """(start, contribution, new rank) Columns of the double round."""
+    new = F.lit(1.0 - damping) + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+    return F.lit(1.0), F.col("rank") / F.col("outdeg"), new
+
+
+def _pagerank(
+    nodes: DataFrame, edges: DataFrame, op: str, arith: tuple, **loop
+) -> tuple[DataFrame, int]:
+    """The one PageRank round body, in the given arithmetic
+    (``_integer_arith`` / ``_double_arith``), run by the fixpoint driver
+    with the caller's stop rule and round limit (``loop``). Each round
+    is one src-keyed equi join of the out-degree-folded edge relation
+    with the rank relation and one algebraic dst aggregation; ``prev``
+    carries the previous rank for a residual stop rule."""
+    start, contrib, new = arith
+    # out-degree folds into the edge relation once, outside the loop
+    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    e = edges.join(outdeg, "src").localCheckpoint(eager=False)
+
+    def _round(ranks: DataFrame, cut) -> DataFrame:
+        sums = (
+            e.join(ranks.select(F.col("id").alias("src"), "rank"), "src")
+            .select(F.col("dst").alias("id"), contrib.alias("c"))
+            .groupBy("id")
+            .agg(F.sum("c").alias("s"))
+        )
+        return ranks.join(sums, "id", "left").select(
+            "id", new.alias("rank"), F.col("rank").alias("prev")
+        )
+
+    ranks = nodes.select("id", start.alias("rank")).localCheckpoint(eager=False)
+    ranks, rounds = fixpoint(op, ranks, _round, **loop)
+    return ranks.select("id", "rank"), rounds
 
 
 def pagerank_converged(
@@ -62,62 +107,26 @@ def pagerank_converged(
     period ≥ 2 oscillation of a few final units is possible — the
     5000-doc overlay enters one instead of fixing). The stopping rule
     is therefore STATE RECURRENCE: stop at the first round whose rank
-    vector reproduces any earlier round's. Both outcomes are exactly
-    deterministic (no epsilon, no shuffle-order dependence), so a SQL
-    oracle replays the result by unrolling to the measured stop round
-    (for a fixed point, to ANY count at or beyond it, since further
-    rounds are identities).
+    vector reproduces any earlier round's, the start included. Both
+    outcomes are exactly deterministic (no epsilon, no shuffle-order
+    dependence), so a SQL oracle replays the result by unrolling to
+    the measured stop round (for a fixed point, to ANY count at or
+    beyond it, since further rounds are identities).
 
-    Recurrence is detected on an exact integer signature per round —
-    (count, sum, xor of per-row hashes), order-independent — which is
-    also the round's single Spark action: the aggregation materializes
-    the lazily-checkpointed rank relation and reads off the signal at
-    once (the ``components.py`` fixpoint-loop shape; per-round lineage
-    is truncated so round k never replays rounds 1..k-1).
-    ``max_rounds`` is a safety cap; the loop raises if it trips,
-    because returning a non-recurrent state would silently break the
-    oracle contract.
+    Recurrence is detected on the driver's exact order-independent
+    signature — (count, sum, xor of per-row hashes) — which is also the
+    round's single Spark action. ``max_rounds`` is a safety cap; the
+    loop raises if it trips, because returning a non-recurrent state
+    would silently break the oracle contract.
     """
-    base = (DAMPING_DEN - DAMPING_NUM) * scale // DAMPING_DEN
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    e = edges.join(outdeg, "src").localCheckpoint(eager=False)
-    ranks = nodes.select("id", F.lit(scale).cast("long").alias("rank")).localCheckpoint(
-        eager=False
-    )
-
-    def _sig(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("rank").alias("s"),
-            F.bit_xor(F.xxhash64("id", "rank")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["s"], row["h"])
-
-    seen: dict[tuple, int] = {_sig(ranks): 0}
-    for rounds in range(1, max_rounds + 1):
-        sums = (
-            e.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"), F.expr("rank div outdeg").alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.join(sums, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(f"({DAMPING_NUM} * coalesce(s, 0L)) div {DAMPING_DEN}")
-                ).cast("long").alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        sig = _sig(ranks)
-        if sig in seen:
-            return ranks, rounds
-        seen[sig] = rounds
-    raise RuntimeError(
-        f"integer pagerank did not recur within {max_rounds} rounds"
+    return _pagerank(
+        nodes,
+        edges,
+        "pagerank_converged",
+        _integer_arith(scale),
+        stop=recurs("id", "rank", total="rank"),
+        max_rounds=max_rounds,
+        check_start=True,
     )
 
 
@@ -130,33 +139,8 @@ def pagerank(
     """→ (id, rank) integer PageRank after ``iters`` unrolled
     iterations. ``nodes``: (id), ``edges``: (src, dst) — self-loops
     and duplicate edges must already be resolved by the caller."""
-    base = (DAMPING_DEN - DAMPING_NUM) * scale // DAMPING_DEN
-    # out-degree folds into the edge relation once, outside the loop
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    e = edges.join(outdeg, "src").localCheckpoint(eager=False)
-    ranks = nodes.select("id", F.lit(scale).cast("long").alias("rank"))
-    for _ in range(iters):
-        sums = (
-            e.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"), F.expr("rank div outdeg").alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.join(sums, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(f"({DAMPING_NUM} * coalesce(s, 0L)) div {DAMPING_DEN}")
-                ).cast("long").alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    ranks, _ = _pagerank(nodes, edges, "pagerank", _integer_arith(scale), rounds=iters)
     return ranks
-
-
-PAGERANK_FLOAT_TOL = 1e-6
 
 
 def pagerank_float(
@@ -186,42 +170,17 @@ def pagerank_float(
     exactly the trade the integer twin exists to cover; bench.py times
     both and reports the round counts (link_pagerank_float row).
 
-    Per-round cost is identical to the integer path — one src-keyed
-    equi join of the out-degree-folded edge relation with the rank
-    relation, one algebraic dst aggregation — plus an id-keyed join of
-    the (small) previous rank relation to compute the residual, read
-    off in the round's single action.
+    Same round body as the integer path; the residual is read off the
+    carried previous rank in the round's single action.
     """
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    e = edges.join(outdeg, "src").localCheckpoint(eager=False)
-    ranks = nodes.select("id", F.lit(1.0).alias("rank")).localCheckpoint(eager=False)
-    base = 1.0 - damping
-    for rounds in range(1, max_rounds + 1):
-        sums = (
-            e.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"), (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("s"))
-        )
-        nxt = (
-            ranks.join(sums, "id", "left")
-            .select(
-                "id",
-                F.col("rank").alias("prev"),
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-            .localCheckpoint(eager=False)
-        )
-        row = nxt.agg(
-            F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("l1"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        ranks = nxt.select("id", "rank")
-        if row["l1"] / max(row["n"], 1) < tol:
-            return ranks, rounds
-    raise RuntimeError(f"float pagerank did not reach tol={tol} in {max_rounds} rounds")
+    return _pagerank(
+        nodes,
+        edges,
+        "pagerank_float",
+        _double_arith(damping),
+        stop=within(F.col("rank") - F.col("prev"), tol),
+        max_rounds=max_rounds,
+    )
 
 
 def host_graph(
@@ -286,32 +245,33 @@ def hits_scores(nodes: DataFrame, edges: DataFrame, iters: int = HITS_ITERS) -> 
     previous score vector plus one algebraic (map-side-combinable)
     aggregation; hot hubs/authorities collapse in the partial agg.
     """
-    a = nodes.select("id", F.lit(1).cast("long").alias("auth"))
-    h = nodes.select("id", F.lit(1).cast("long").alias("hub"))
     e = edges.localCheckpoint(eager=False)
-    for _ in range(iters):
-        a = (
+
+    def _round(state, cut):
+        _, h = state
+        a = cut(
             nodes.join(
                 e.join(h.withColumnRenamed("id", "src"), "src")
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum("hub").alias("s")),
                 "id",
                 "left",
-            )
-            .select("id", F.coalesce("s", F.lit(0)).cast("long").alias("auth"))
-            .localCheckpoint(eager=False)
+            ).select("id", F.coalesce("s", F.lit(0)).cast("long").alias("auth"))
         )
-        h = (
-            nodes.join(
-                e.join(a.withColumnRenamed("id", "dst"), "dst")
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("auth").alias("s")),
-                "id",
-                "left",
-            )
-            .select("id", F.coalesce("s", F.lit(0)).cast("long").alias("hub"))
-            .localCheckpoint(eager=False)
-        )
+        h = nodes.join(
+            e.join(a.withColumnRenamed("id", "dst"), "dst")
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.sum("auth").alias("s")),
+            "id",
+            "left",
+        ).select("id", F.coalesce("s", F.lit(0)).cast("long").alias("hub"))
+        return a, h
+
+    start = (
+        nodes.select("id", F.lit(1).cast("long").alias("auth")),
+        nodes.select("id", F.lit(1).cast("long").alias("hub")),
+    )
+    (a, h), _ = fixpoint("hits_scores", start, _round, rounds=iters)
     return h.join(a, "id").select("id", "hub", "auth")
 
 
@@ -439,19 +399,22 @@ def resolve_redirects(edges: DataFrame, max_depth: int) -> DataFrame:
     cycle members converge to a node inside the cycle with saturated
     hops, they never diverge or duplicate.
     """
-    f = edges.select("src", "dst", F.lit(1).cast("long").alias("hops"))
-    rounds = max(1, (max_depth - 1).bit_length())
-    for _ in range(rounds):
+    def _round(f: DataFrame, cut) -> DataFrame:
         nxt = f.select(
             F.col("src").alias("_s2"),
             F.col("dst").alias("_d2"),
             F.col("hops").alias("_h2"),
         )
-        f = f.join(nxt, F.col("dst") == F.col("_s2"), "left").select(
+        return f.join(nxt, F.col("dst") == F.col("_s2"), "left").select(
             "src",
             F.coalesce("_d2", "dst").alias("dst"),
             (F.col("hops") + F.coalesce("_h2", F.lit(0))).alias("hops"),
         )
+
+    f = edges.select("src", "dst", F.lit(1).cast("long").alias("hops"))
+    f, _ = fixpoint(
+        "resolve_redirects", f, _round, rounds=max(1, (max_depth - 1).bit_length())
+    )
     return f.select("src", F.col("dst").alias("final"), "hops")
 
 

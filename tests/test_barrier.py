@@ -1,11 +1,11 @@
-"""plans.barrier.stats_barrier: rows/schema identical to plain
+"""plans.fixpoint.stats_barrier: rows/schema identical to plain
 localCheckpoint, and (when the internal API is present) the estimated
 sizeInBytes actually resets — the property that keeps aggregation-free
 self-join fixpoints (Boruvka pointer doubling) off the BigInt cliff."""
 
 from pyspark.sql import functions as F
 
-from ophois_spark.plans.barrier import stats_barrier
+from ophois_spark.plans.fixpoint import stats_barrier
 
 
 def _size_bits(df) -> int:

@@ -66,11 +66,20 @@ CORPUS = [
 ]
 
 
+# ties and overlapping pairs (aaa, abab, banana/bandana)
+TIE_CORPUS = [
+    (1, "aaa abab low lower lowest"),
+    (2, "newest newest widest low aaa"),
+    (3, "abab abab banana bandana"),
+]
+
+
 def test_bpe_train_matches_python_reference(spark):
-    docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    got = bpe_train(docs, n_merges=10)
-    want = _py_bpe_train([t for _, t in CORPUS], 10)
-    assert got == want
+    for corpus, n_merges in ((CORPUS, 10), (TIE_CORPUS, 20)):
+        docs = spark.createDataFrame(corpus, "doc_id long, text string")
+        got = bpe_train(docs, n_merges=n_merges)
+        want = _py_bpe_train([t for _, t in corpus], n_merges)
+        assert got == want
 
 
 def test_bpe_train_tiebreak_lexicographic(spark):
@@ -100,21 +109,3 @@ def test_bpe_overlapping_run_greedy(spark):
     got = {r["doc_id"]: r["n_bpe_tokens"] for r in bpe_apply(docs, merges).collect()}
     # aaaa -> aa aa </w> = 3; aaa -> aa a </w> = 3
     assert got == {1: 6}
-
-
-def test_incremental_trainer_matches_full_scan_twin(spark):
-    """bpe_train_incremental (delta pair counts — the measured negative
-    result kept as a documented twin) must produce the EXACT merge
-    sequence of the default full-re-count trainer on a corpus with
-    ties and overlapping pairs."""
-    from ophois_spark.operators.bpe import bpe_train, bpe_train_incremental as bpe_train_scan
-
-    docs = spark.createDataFrame(
-        [
-            (1, "aaa abab low lower lowest"),
-            (2, "newest newest widest low aaa"),
-            (3, "abab abab banana bandana"),
-        ],
-        "doc_id long, text string",
-    )
-    assert bpe_train(docs, n_merges=20) == bpe_train_scan(docs, n_merges=20)

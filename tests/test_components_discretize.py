@@ -34,38 +34,6 @@ def test_bfs_largest_component_golden(spark):
     assert degrees_map(lc) == expected
 
 
-@pytest.mark.slow
-@settings(max_examples=8, deadline=None)
-@given(st.integers(min_value=0, max_value=2**32))
-def test_star_and_labelprop_components_equivalent(spark, seed):
-    """A/B invariant: large-star/small-star contraction and label
-    propagation produce identical (id, comp) labels — including on a
-    long chain appended to stress diameter. Both algorithms are named
-    EXPLICITLY (connected_components delegates to labelprop, so calling
-    it here would compare labelprop against itself)."""
-    import random
-
-    from ophois_spark.operators.components import (
-        connected_components_labelprop,
-        connected_components_star,
-    )
-
-    rnd = random.Random(seed)
-    n = rnd.randint(2, 30)
-    ids = [str(100 + i) for i in range(n)]
-    links = set()
-    for _ in range(rnd.randint(0, 2 * n)):
-        a, b = rnd.sample(ids, 2)
-        links.add((min(a, b), max(a, b)))
-    chain = [str(500 + i) for i in range(12)]
-    links |= set(zip(chain, chain[1:]))
-    nodes = [(i, "48.0", "2.0") for i in ids + chain]
-    g = graph_from_tuples(spark, nodes, sorted(links))
-    a = sorted(map(tuple, connected_components_star(g).collect()))
-    b = sorted(map(tuple, connected_components_labelprop(g).collect()))
-    assert a == b
-
-
 def test_component_size_distribution(spark):
     g = graph_from_tuples(spark, BFS_NODES, BFS_LINKS)
     labels = connected_components(g)
@@ -78,18 +46,22 @@ def test_component_size_distribution(spark):
 @settings(max_examples=10, deadline=None)
 @given(st.integers(min_value=0, max_value=2**32))
 def test_components_match_union_find(spark, seed):
-    # property: labels partition == union-find oracle partition
+    # property: labels partition == union-find oracle partition, with
+    # a 12-node chain appended so the high-diameter case is always hit
     import random
 
     rnd = random.Random(seed)
     n = rnd.randint(1, 40)
     ids = [str(100 + i) for i in range(n)]
-    nodes = [(i, "48.0", "2.0") for i in ids]
     links = set()
     for _ in range(rnd.randint(0, 60)):
         a, b = rnd.sample(ids, 2) if n >= 2 else (None, None)
         if a:
             links.add((min(a, b), max(a, b)))
+    chain = [str(500 + i) for i in range(12)]
+    links |= set(zip(chain, chain[1:]))
+    ids += chain
+    nodes = [(i, "48.0", "2.0") for i in ids]
     g = graph_from_tuples(spark, nodes, sorted(links))
     labels = {r["id"]: r["comp"] for r in connected_components(g).collect()}
 

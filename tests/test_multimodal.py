@@ -184,6 +184,24 @@ def test_decode_wav_rejects_bad_payloads():
     with pytest.raises(ValueError):
         decode_audio(b"\x00" * 100)
 
+    from ophois_spark.sources.pages import synth_wav
+
+    def chunk(cid, body):
+        return cid + len(body).to_bytes(4, "little") + body
+
+    wav = synth_wav(3)
+    fmt = wav[12:36]  # the 24-byte fmt chunk
+    samples = wav[44:]
+    # a data chunk declaring more bytes than the payload holds
+    with pytest.raises(ValueError, match="truncated"):
+        decode_audio(wav[:-4])
+    # fmt after data
+    with pytest.raises(ValueError, match="after the data"):
+        decode_audio(b"RIFF\x00\x00\x00\x00WAVE" + chunk(b"data", samples) + fmt)
+    # odd-length PCM16 data (word-aligned with its pad byte)
+    with pytest.raises(ValueError, match="odd-length"):
+        decode_audio(b"RIFF\x00\x00\x00\x00WAVE" + fmt + chunk(b"data", samples[:21]) + b"\x00")
+
 
 def test_media_features_dispatches_real_bmp_decode(spark):
     """A BMP payload must take the REAL decode path (pixel-array mean),
