@@ -1,6 +1,9 @@
-"""Benchmark harness — one JSON line on stdout.
+"""Benchmark harness — the repo's one bench script; one JSON line on stdout.
 
-Runs the engine's headline workloads at ``$SPARK_GRAFT_SF_DIR``
+``python bench.py`` runs the operator suite; ``python bench.py scaling``
+runs the core and input-size scaling ladders (see ``scaling``).
+
+The suite runs the engine's headline workloads at ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``:
 
 - ``pages_pipeline``: synthetic Common-Crawl-style pages (scaled to the
@@ -26,8 +29,14 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import subprocess
 import sys
+import tempfile
 import time
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+BASELINE_MD = os.path.join(HERE, "BENCH", "BASELINE.md")
 
 
 def main() -> None:
@@ -98,32 +107,36 @@ def main() -> None:
     edges_per_sec = n_edges / t_pipeline
 
     # -- operator queries ---------------------------------------------------
-    # memoized queries (MEMO_RESETS) drop their session memo before each
-    # pass so both passes time the query's own work — without the reset
-    # pass 2 is a cache hit and best-of-2 would report ~0 s. Downstream
-    # consumers of a memo (e.g. top_pages_by_rank) stay warm by design.
+    # the shared derived graph is built once, outside every row's timer
+    # (best-of-2 already dropped its build from every row). A row that
+    # produces a session memo (MEMO_RESETS) drops it before each pass so
+    # both passes time the row's own work — without the reset pass 2 is
+    # a cache hit and best-of-2 would report ~0 s. Consumers of a memo
+    # (e.g. top_pages_by_rank) stay warm by design.
     #
-    # Rows in MEMO_COLD_HEADLINE are memo consumers whose FIRST rep also
-    # pays the producer loop (their memo is cold when they run in sorted
-    # order) while the second rep is a near-total memo hit: best-of-2
+    # A row whose FIRST rep missed a memo it does not produce (the memo
+    # was cold when the row ran in sorted order) paid the producer loop
+    # there, while its second rep is a near-total memo hit: best-of-2
     # would headline the memo hit (r4 reps: crawl_frontier [23.2 s,
-    # 0.31 s]), which is not the operator. For these, the headline is
-    # the COLD first rep and the memo hit is disclosed separately in
+    # 0.31 s]), which is not the operator. For such rows the headline
+    # is the COLD first rep and the memo hit is disclosed separately in
     # memo_hit_sec (round-5 protocol change, per the r4 verdict).
-    from ophois_spark.queries import MEMO_RESETS
+    from ophois_spark.plans.cache import MEMOS
+    from ophois_spark.queries import MEMO_RESETS, derived_graph
 
-    MEMO_COLD_HEADLINE = {"crawl_frontier", "scc_dag_edges", "bpe_merges"}
+    derived_graph(spark, sf_dir)
     memo_hits: dict[str, float] = {}
 
     for name, fn in sorted(QUERIES.items()):
         reset = MEMO_RESETS.get(name, lambda: None)
+        consumed = [(m, m.misses) for m in MEMOS if m.produces != name]
 
         def run_query(fn=fn, reset=reset) -> None:
             reset()
             materialize(fn(spark, sf_dir))
 
         best_of_2(name, run_query)
-        if name in MEMO_COLD_HEADLINE:
+        if any(m.misses > before for m, before in consumed):
             cold, hit = reps[name]
             timings[name] = cold
             memo_hits[name] = hit
@@ -397,8 +410,7 @@ def main() -> None:
     # file so the round artifact stays machine-parseable even if the
     # driver's stdout capture truncates/escapes the tail (BENCH_r03's
     # did)
-    out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "BENCH", "bench_summary.json")
+    out_path = os.path.join(HERE, "BENCH", "bench_summary.json")
     os.makedirs(os.path.dirname(out_path), exist_ok=True)
     with open(out_path, "w") as fh:
         json.dump(summary, fh, indent=1)
@@ -406,5 +418,281 @@ def main() -> None:
     spark.stop()
 
 
+# -- scaling ladders -----------------------------------------------------------
+# One measured job (graph construction + tiling over a pre-generated pages
+# input) run in its own pinned subprocess per reading: a JVM cannot change
+# local[N] after start-up. The protocol is in BENCH/BASELINE.md.
+SCALE_PAGES = 8000
+SCALE_REPS = 4  # interleaved low/high children per level, best kept
+SCALE_PASSES = 3  # measured passes per child after one untimed warm pass
+CORES_LOW, CORES_HIGH = 1, 4
+# a JOB property sized once for the larger level (a real N vs 4N
+# comparison ships the same spark-submit conf to both), not retuned per
+# level — retuning hands the small level fewer, chunkier tasks
+SHUFFLE_PARTITIONS = 2 * CORES_HIGH
+LINEARITY_PAGES = (8000, 24000, 72000)
+GRID = 12
+INPUT_FILES = 128  # fixed file layout => identical scan splits at all levels
+LOG_SECTION = "## Measurement log"
+LINEARITY_SECTION = "## Input-size linearity"
+
+
+def _child(cpus: int, input_dir: str) -> None:
+    """Run the measured job at local[cpus]; print one JSON line."""
+    from pyspark.sql import functions as F
+
+    from ophois_spark.functions import cell_expr
+    from ophois_spark.operators.extract import graph_from_pages
+    from ophois_spark.operators.spatial import tile_assignment
+    from ophois_spark.session import get_spark
+
+    spark = get_spark(
+        f"ophois-scaling-{cpus}",
+        master=f"local[{cpus}]",
+        shuffle_partitions=SHUFFLE_PARTITIONS,
+        # fine scan splits: ~1-2 files per task at every level, so the
+        # Python extraction stage load-balances instead of running as a
+        # handful of oversized tasks (identical splits at all levels)
+        extra_conf={"spark.sql.files.maxPartitionBytes": "8m"},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+
+    pages = spark.read.parquet(input_dir)
+    # exclude one-time Python worker fork/import from the timed window
+    warm = spark.range(cpus * 4).repartition(cpus)
+    warm.select(F.pandas_udf(lambda s: s, "long")(warm["id"])).count()
+
+    def counted(label: str, df) -> "F.DataFrame":
+        return df.groupBy().agg(F.count(F.lit(1)).alias("n")).select(
+            F.lit(label).alias("k"), "n"
+        )
+
+    def run() -> tuple[float, float, int, int, int, int]:
+        # each phase is ONE Spark action: the independent branch counts
+        # are unioned so their stages share a single job (one driver
+        # submission, branches scheduled concurrently across the same
+        # executor pool) instead of paying a job-overhead barrier per
+        # count — the fixed driver cost per pass shrinks with the wall
+        # time at high parallelism, where it otherwise dominates small
+        # phases (measured: the old two-job tiling phase scaled at only
+        # ~2.2x on 4x cores purely from per-job overhead).
+        t0 = time.perf_counter()
+        g = graph_from_pages(pages.filter(F.col("lang") == "en"), persist_records=True)
+        ingest_counts = dict(
+            counted("nodes", g.nodes).unionByName(counted("edges", g.edges)).collect()
+        )
+        n_nodes, n_edges = ingest_counts["nodes"], ingest_counts["edges"]
+        t_ingest = time.perf_counter() - t0
+
+        t0 = time.perf_counter()
+        nodes_c = g.nodes.withColumn(
+            "cell", cell_expr(F.col("lon_d"), F.col("lat_d"), 11)
+        )
+        cell_groups = nodes_c.groupBy("cell", "lat", "lon").agg(
+            F.min("id").alias("rep")
+        )
+        tile_edges = tile_assignment(g.edges_with_coords(), 14)
+        tiling_counts = dict(
+            counted("cells", cell_groups)
+            .unionByName(counted("tiles", tile_edges))
+            .collect()
+        )
+        n_cell_groups, n_tile_edges = tiling_counts["cells"], tiling_counts["tiles"]
+        t_tiling = time.perf_counter() - t0
+        return t_ingest, t_tiling, n_nodes, n_edges, n_cell_groups, n_tile_edges
+
+    # first pass warms JIT / query planner / Python workers — the state a
+    # long-lived cluster runs in permanently; then SCALE_PASSES measured
+    # passes, best kept (steady-state: C2-JIT and page cache stabilize by
+    # pass 2-3, and host-noise bursts within a child are rejected the
+    # same way cross-child reps reject drift)
+    run()
+    best = None
+    for _ in range(SCALE_PASSES):
+        spark.catalog.clearCache()
+        res = run()
+        if best is None or res[0] + res[1] < best[0] + best[1]:
+            best = res
+    t_ingest, t_tiling, n_nodes, n_edges, n_cell_groups, n_tile_edges = best
+    total = t_ingest + t_tiling
+    print(
+        json.dumps(
+            {
+                "cpus": cpus,
+                "t_ingest_s": round(t_ingest, 3),
+                "t_tiling_s": round(t_tiling, 3),
+                "t_total_s": round(total, 3),
+                "n_nodes": n_nodes,
+                "n_edges": n_edges,
+                "n_cell_groups": n_cell_groups,
+                "n_tile_edges": n_tile_edges,
+            }
+        )
+    )
+    spark.stop()
+
+
+def _generate(input_dir: str, n_pages: int) -> None:
+    """Write a shared pages input once (fixed file count)."""
+    from ophois_spark.session import get_spark
+    from ophois_spark.sources.pages import synth_pages
+
+    spark = get_spark("ophois-scaling-gen", master=f"local[{os.cpu_count()}]")
+    spark.sparkContext.setLogLevel("ERROR")
+    synth_pages(spark, n_pages, grid=GRID).repartition(INPUT_FILES).write.mode(
+        "overwrite"
+    ).parquet(input_dir)
+    print(json.dumps({"rows": spark.read.parquet(input_dir).count()}))
+    spark.stop()
+
+
+def _spawn(call: str, *args, pin_cpus: int | None = None) -> dict:
+    """Run ``bench.<call>(*args)`` in a fresh interpreter; return its last
+    JSON line. With ``pin_cpus``, taskset-pin the whole process tree (JVM,
+    Python workers, GC/shuffle service threads) to exactly that many
+    CPUs. Unpinned local[N] only caps TASK slots at N — the JVM's
+    netty/GC/writer threads and the Arrow Python workers spill onto the
+    box's other cores, so the low level silently consumes ~1.5x its
+    nominal cores and deflates the measured N->4N ratio. A real N-core
+    executor host confines all of that inside its N cores."""
+    pin = []
+    if pin_cpus:
+        cpus = sorted(os.sched_getaffinity(0))[:pin_cpus]
+        pin = ["taskset", "-c", ",".join(map(str, cpus))]
+    out = subprocess.run(
+        [*pin, sys.executable, "-c", f"import bench; bench.{call}{args!r}"],
+        capture_output=True, text=True, check=True, cwd=HERE,
+    )
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def write_section(path: str, header: str, text: str, *, append_row: bool = False) -> None:
+    """Rewrite the markdown section whose heading line starts with
+    ``header`` (it runs to the next ``## `` heading), leaving every other
+    byte of the file as it was.
+
+    By default ``text`` is the whole new section, heading included; a
+    missing section is appended at the end. With ``append_row``, ``text``
+    is one table row, inserted after the last row of the section's first
+    table."""
+    with open(path) as f:
+        md = f.read()
+    if md.startswith(header) or "\n" + header in md:
+        at = 0 if md.startswith(header) else md.index("\n" + header) + 1
+        end = md.find("\n## ", at)
+        end = len(md) if end < 0 else end + 1
+        if append_row:
+            lines = md[at:end].split("\n")
+            row = next(i for i, ln in enumerate(lines) if ln.startswith("|"))
+            while row + 1 < len(lines) and lines[row + 1].startswith("|"):
+                row += 1
+            lines.insert(row + 1, text)
+            section = "\n".join(lines)
+        else:
+            section = text.rstrip("\n") + ("\n\n" if end < len(md) else "\n")
+        md = md[:at] + section + md[end:]
+    elif append_row:
+        raise ValueError(f"{path} has no section {header!r}")
+    else:
+        md = md.rstrip("\n") + "\n\n" + text.rstrip("\n") + "\n"
+    with open(path, "w") as f:
+        f.write(md)
+
+
+def scaling() -> int:
+    """Core ladder: the job at CORES_LOW and CORES_HIGH (SCALE_REPS
+    interleaved children each, to decorrelate host drift; best child per
+    level) plus one full-box child, all on the same SCALE_PAGES input;
+    efficiency = (throughput_high / throughput_low) / (high / low), and
+    every level must return the same counts. Size ladder: the same job
+    at min(16, cores) over LINEARITY_PAGES inputs; a flat pages/s means
+    no super-linear term hides in the pipeline. Appends a row to the
+    measurement log and replaces the linearity section of
+    BENCH/BASELINE.md; one JSON line on stdout."""
+    full = os.cpu_count()
+    lin_cpus = min(16, full)
+    work = tempfile.mkdtemp(prefix="ophois_scaling_")
+    try:
+        inputs = {}
+        for n_pages in sorted({SCALE_PAGES, *LINEARITY_PAGES}):
+            inputs[n_pages] = os.path.join(work, f"pages_{n_pages}")
+            _spawn("_generate", inputs[n_pages], n_pages)
+
+        runs: dict[str, list[dict]] = {"low": [], "high": []}
+        for _ in range(SCALE_REPS):
+            for level, cpus in (("low", CORES_LOW), ("high", CORES_HIGH)):
+                runs[level].append(_spawn("_child", cpus, inputs[SCALE_PAGES], pin_cpus=cpus))
+        runs["full"] = [_spawn("_child", full, inputs[SCALE_PAGES], pin_cpus=full)]
+        linearity = []
+        for n_pages in LINEARITY_PAGES:
+            r = _spawn("_child", lin_cpus, inputs[n_pages], pin_cpus=lin_cpus)
+            r["n_pages"] = n_pages
+            r["pages_per_s"] = round(n_pages / r["t_total_s"], 1)
+            linearity.append(r)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+    best = {level: min(rs, key=lambda r: r["t_total_s"]) for level, rs in runs.items()}
+    lo, hi = best["low"], best["high"]
+    keys = ("n_nodes", "n_edges", "n_cell_groups", "n_tile_edges")
+    parity = all(r[k] == lo[k] for rs in runs.values() for r in rs for k in keys)
+    thr = {level: SCALE_PAGES / r["t_total_s"] for level, r in best.items()}
+    efficiency = (thr["high"] / thr["low"]) / (CORES_HIGH / CORES_LOW)
+    base = linearity[0]["pages_per_s"]
+    for r in linearity:
+        r["vs_smallest"] = round(r["pages_per_s"] / base, 3)
+    summary = {
+        "metric": "scaling efficiency (N -> 4N parallelism, identical job+input)",
+        "value": round(efficiency, 3),
+        "unit": "fraction",
+        "target": 0.8,
+        "n_pages": SCALE_PAGES,
+        "reps": SCALE_REPS,
+        "passes": SCALE_PASSES,
+        "result_parity": parity,
+        **best,
+        "all_runs": {level: [r["t_total_s"] for r in rs] for level, rs in runs.items()},
+        **{f"pages_per_sec_{level}": round(t, 1) for level, t in thr.items()},
+        "linearity_cpus": lin_cpus,
+        "linearity": linearity,
+        "worst_retention": min(r["vs_smallest"] for r in linearity),
+    }
+    write_section(
+        BASELINE_MD,
+        LOG_SECTION,
+        f"| {CORES_LOW} -> {CORES_HIGH} (pinned) | {SCALE_PAGES} | {SCALE_REPS} "
+        f"| {lo['t_total_s']} | {hi['t_total_s']} | {efficiency:.3f} |",
+        append_row=True,
+    )
+    table = "\n".join(
+        f"| {r['n_pages']} | {r['t_ingest_s']} | {r['t_tiling_s']} | {r['t_total_s']} "
+        f"| {r['pages_per_s']} | {r['vs_smallest']} |"
+        for r in linearity
+    )
+    write_section(
+        BASELINE_MD,
+        LINEARITY_SECTION,
+        f"""{LINEARITY_SECTION}
+
+Same job, same `local[{lin_cpus}]` (taskset-pinned), same per-child
+protocol as the core ladder — only the INPUT grows in 3x steps. Flat
+pages/sec across a {LINEARITY_PAGES[-1] // LINEARITY_PAGES[0]}x volume range means no
+super-linear term (accumulating driver state, quadratic join, partition
+cliff) hides in the pipeline, which is what licenses extrapolating the
+measured throughput toward the 10^12-document target. Reproduce:
+`python bench.py scaling` (its size ladder).
+
+| pages | ingest s | tiling s | total s | pages/s | vs smallest |
+|---|---|---|---|---|---|
+{table}
+
+- worst-case throughput retention across sizes: **{summary['worst_retention']:.3f}x**
+  of the smallest input's rate (1.0 = perfectly input-linear).
+""",
+    )
+    print(json.dumps(summary))
+    return 0
+
+
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(scaling() if sys.argv[1:2] == ["scaling"] else main())

@@ -748,9 +748,7 @@ def ivfadc_rerank_topk(
     Scale shape at 10^11 vectors: the coarse probe is a broadcast of
     √N-ish centroids; the ADC scan's join is candidate-list-sized
     (nprobe/n_coarse of the corpus) against a broadcast |Q|·M·K LUT;
-    only the |Q|·shortlist rerank rows ever touch raw vectors. This is
-    the index layout a 100 TB embedding store actually serves from —
-    codes partitioned BY coarse cell, so the probe prunes partitions.
+    only the |Q|·shortlist rerank rows ever touch raw vectors.
     """
     from pyspark.sql import Window
 

@@ -6,8 +6,6 @@ from scratch on the engine's hierarchical cell index
 from-scratch anyway):
 
 - ``with_cells``          cell id + integer grid coords as Column math
-- ``coord_dedup_salted``  same-cell coordinate-hash dedup with explicit
-                          two-phase salting for dense urban cells
 - ``same_cell_pairs``     intersection detection: same-cell node join
 - ``point_in_polygon``    bbox/cell prefilter + exact ray casting as
                           pure Column expressions (no UDF)
@@ -19,9 +17,11 @@ from-scratch anyway):
                           inside applyInPandas)
 
 Scale notes: every join here is an equi hash join on a cell key; dense
-cells (urban skew) are handled by AQE skew-join plus explicit salting in
-the aggregation paths; the kNN loop doubles the ring radius per round so
-the number of driver iterations is logarithmic.
+cells (urban skew) are handled by AQE skew-join, and the algebraic
+aggregations need no salting because map-side partial aggregation
+collapses a hot key to one partial row per map task (measured in
+BENCH/BASELINE.md, "Skew-handling evidence"); the kNN loop doubles the
+ring radius per round so the number of driver iterations is logarithmic.
 """
 
 from __future__ import annotations
@@ -47,29 +47,6 @@ M_PER_DEG = EARTH_RADIUS_M * math.pi / 180.0
 
 def with_cells(df: DataFrame, res: int, lon_col: str = "lon_d", lat_col: str = "lat_d") -> DataFrame:
     return df.withColumn("cell", cell_expr(F.col(lon_col), F.col(lat_col), res))
-
-
-def coord_dedup_salted(
-    nodes: DataFrame, res: int, n_salt: int = 16, lon_col: str = "lon_d", lat_col: str = "lat_d"
-) -> DataFrame:
-    """Coordinate-hash dedup with explicit two-phase (salted) aggregation.
-
-    Phase 1 groups by (cell, coords, salt) — the salt spreads a dense
-    cell's rows over ``n_salt`` reducers; phase 2 merges the partials.
-    Equivalent to the plain groupBy (tested) but immune to single-reducer
-    hot cells at 10^12 scale.
-    """
-    cells = with_cells(nodes, res, lon_col, lat_col)
-    salt = F.pmod(F.hash("id"), F.lit(n_salt)).alias("salt")
-    partial = (
-        cells.select("cell", lat_col, lon_col, "id", salt)
-        .groupBy("cell", lat_col, lon_col, "salt")
-        .agg(F.min("id").alias("rep_id"), F.count(F.lit(1)).alias("n_dup"))
-    )
-    return (
-        partial.groupBy("cell", lat_col, lon_col)
-        .agg(F.min("rep_id").alias("rep_id"), F.sum("n_dup").alias("n_dup"))
-    )
 
 
 def same_cell_pairs(nodes: DataFrame, res: int) -> DataFrame:
@@ -1455,9 +1432,8 @@ def cell_majority(
     Scale shape: one map-side-combinable count per (cell, value), a
     per-cell total by re-aggregating those partials (never re-reading
     rows), and a top-1 window whose partitions are value-cardinality-
-    bounded (#langs per cell), not row-bounded. No skew risk beyond
-    the (cell,value) count itself, which salting upstream of this
-    operator would address the same way coord_dedup_salted does.
+    bounded (#langs per cell), not row-bounded. The (cell,value) count
+    is algebraic, so map-side partial aggregation absorbs a hot cell.
     """
     from ophois_spark.plans.cache import swap_cached
 
@@ -1705,8 +1681,8 @@ def zorder_key(ix, iy, bits: int = ZORDER_BITS):
     pure integer Column math — the clustering key an Iceberg/parquet
     sort order uses so that spatially-near rows land in the same file
     ranges (the write-side counterpart of the cell-clustered layout in
-    bench_layout.py; 2·bits ≤ 62 keeps the key in int64). Exact shifts
-    and masks only — bit-identical in any engine.
+    plans/spatial_layout.py; 2·bits ≤ 62 keeps the key in int64). Exact
+    shifts and masks only — bit-identical in any engine.
     """
     ix = ix.cast("long")
     iy = iy.cast("long")

@@ -158,14 +158,14 @@ def interval_point_join(
     """Containment join Spark lacks as a built-in: every (interval,
     point) pair sharing ``key`` with start ≤ t ≤ end — WITHOUT a range
     join. What the naive ``ON key AND s <= t AND t <= e`` really plans
-    (measured, bench_interval.py): with the equi-key present, a hash
-    join on the key evaluating the range as a residual over the
-    PER-KEY CROSS PRODUCT — fine at moderate key cardinality,
-    quadratic on hot keys (7x slower at 2 users x 1M points), and a
-    pure broadcast nested loop when no key exists. This is the
-    slab-bucketing formulation every scale engine uses for interval
-    overlap: intervals explode onto the fixed time slabs they cover,
-    points land on exactly ONE slab, and the join becomes a hash
+    (measured, BENCH/BASELINE.md "Interval containment join A/B"): with
+    the equi-key present, a hash join on the key evaluating the range
+    as a residual over the PER-KEY CROSS PRODUCT — fine at moderate key
+    cardinality, quadratic on hot keys (7x slower at 2 users x 1M
+    points), and a pure broadcast nested loop when no key exists. This
+    is the slab-bucketing formulation every scale engine uses for
+    interval overlap: intervals explode onto the fixed time slabs they
+    cover, points land on exactly ONE slab, and the join becomes a hash
     equi-join on (key, slab) + a cheap containment filter whose
     candidate set is bounded by slab co-residence, not key fan-out.
 

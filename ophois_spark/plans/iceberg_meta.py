@@ -164,9 +164,16 @@ class IcebergTableMeta:
     def append_snapshot(self, snapshot_id: int, data_path: str, schema: T.StructType) -> dict:
         """Record one append snapshot over the parquet files at
         ``data_path``; writes manifest, manifest list, and the next
-        v{N}.metadata.json. Returns the new table metadata."""
+        v{N}.metadata.json. Returns the new table metadata.
+
+        Idempotent per ``snapshot_id``: a snapshot already recorded
+        under this id (a commit that failed on a later table and is
+        retried) is replaced, keeping its parent, so the ancestry never
+        holds a duplicate id or a snapshot that is its own parent."""
         now_ms = int(time.time() * 1000)
         prev = self.current()
+        history = prev["snapshots"] if prev else []
+        retried = next((s for s in history if s["snapshot-id"] == snapshot_id), None)
         files = _parquet_files(data_path)
         added_rows = sum(rc for _, _, rc in files)
 
@@ -215,7 +222,10 @@ class IcebergTableMeta:
             json.dump(mlist, f, indent=1)
 
         schema_struct, last_col = schema_json(schema)
-        parent = prev["current-snapshot-id"] if prev else None
+        if retried is not None:
+            parent = retried["parent-snapshot-id"]
+        else:
+            parent = prev["current-snapshot-id"] if prev else None
         snapshot = {
             "snapshot-id": snapshot_id,
             "parent-snapshot-id": parent,
@@ -248,8 +258,12 @@ class IcebergTableMeta:
             "properties": {"write.format.default": "parquet"},
             "current-snapshot-id": snapshot_id,
             "refs": {"main": {"snapshot-id": snapshot_id, "type": "branch"}},
-            "snapshots": (prev["snapshots"] if prev else []) + [snapshot],
-            "snapshot-log": (prev["snapshot-log"] if prev else [])
+            "snapshots": [s for s in history if s["snapshot-id"] != snapshot_id]
+            + [snapshot],
+            "snapshot-log": [
+                e for e in (prev["snapshot-log"] if prev else [])
+                if e["snapshot-id"] != snapshot_id
+            ]
             + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}],
             "metadata-log": (
                 (prev["metadata-log"] if prev else [])

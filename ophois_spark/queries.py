@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ophois_spark.functions import canonical_edge, cell_expr, haversine_m
 from ophois_spark.kernels.geo import EARTH_RADIUS_M
 from ophois_spark.operators.graph import StreetGraph
+from ophois_spark.plans.cache import memo_resets, session_memo
 
 CELL_RES = 18
 DISC_DELTA = 25.0
@@ -65,26 +66,19 @@ def derived_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GRAPH_CACHE: dict = {}
-
-
+@session_memo()
 def derived_graph(spark: SparkSession, sf_dir: str) -> StreetGraph:
-    """Memoized per (session, sf_dir), MATERIALIZED once: ~20 registry
-    queries start from this graph, and each would otherwise replay the
-    scan + canonical-dedup lineage at its own first materialization.
-    Single-entry cache, same policy as ``_component_labels``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _GRAPH_CACHE:
-        _GRAPH_CACHE.clear()
-        nodes = derived_nodes(spark, sf_dir).select(
-            "id",
-            F.col("lat_d").cast("string").alias("lat"),
-            F.col("lon_d").cast("string").alias("lon"),
-            "lat_d",
-            "lon_d",
-        )
-        _GRAPH_CACHE[key] = StreetGraph(nodes, derived_edges(spark, sf_dir)).checkpoint()
-    return _GRAPH_CACHE[key]
+    """Session memo, MATERIALIZED once: ~20 registry queries start from
+    this graph, and each would otherwise replay the scan +
+    canonical-dedup lineage at its own first materialization."""
+    nodes = derived_nodes(spark, sf_dir).select(
+        "id",
+        F.col("lat_d").cast("string").alias("lat"),
+        F.col("lon_d").cast("string").alias("lon"),
+        "lat_d",
+        "lon_d",
+    )
+    return StreetGraph(nodes, derived_edges(spark, sf_dir)).checkpoint()
 
 
 _NODES_SQL = """
@@ -1253,23 +1247,15 @@ SELECT (SELECT COUNT(*) FROM nodes) AS n_nodes,
 """
 
 
-_LABEL_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo(produces="component_labels")
 def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized per (session, sf_dir): three registry queries consume the
-    labels; the iterative propagation runs once (localCheckpoint'ed).
-    Single-entry cache — a new key evicts the old one, so checkpoint
-    blocks (and stopped-session references) never accumulate."""
+    """Session memo: three registry queries consume the labels; the
+    iterative propagation runs once (localCheckpoint'ed). A new key
+    evicts the old entry, so checkpoint blocks (and stopped-session
+    references) never accumulate."""
     from ophois_spark.operators.components import connected_components
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LABEL_CACHE:
-        _LABEL_CACHE.clear()
-        _LABEL_CACHE[key] = connected_components(
-            derived_graph(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-    return _LABEL_CACHE[key]
+    return connected_components(derived_graph(spark, sf_dir)).localCheckpoint(eager=True)
 
 
 def q_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2512,24 +2498,7 @@ def q_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 PAGERANK_PIN_ROUNDS = 64
 
 
-_PAGERANK_CACHE: dict = {}
-
-# Benchmark contract for memoized queries: a harness timing a query's
-# OWN work (rather than cross-query composition) must call the reset
-# before each measured pass, else a second pass reads the session memo
-# and reports a cache hit. Consumers of the memo (top_pages_by_rank)
-# are deliberately NOT listed — measuring them warm is the point.
-MEMO_RESETS: dict = {
-    "link_pagerank_converged": _PAGERANK_CACHE.clear,
-    # component_labels is the PRODUCER of the session label memo — time
-    # the propagation loop itself, not a memo hit (reps showed
-    # [7.4 s, 0.03 s] before this entry). Its consumers
-    # (component_size_dist, largest_component_nodes, simplify_pipeline)
-    # stay warm by design, like top_pages_by_rank over the rank memo.
-    "component_labels": _LABEL_CACHE.clear,
-}
-
-
+@session_memo(produces="link_pagerank_converged")
 def q_link_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer PageRank with the REAL stopping rule (state recurrence —
     exact fixed point or first limit-cycle re-entry, detected on an
@@ -2538,24 +2507,20 @@ def q_link_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     orbit exactly deterministic, which is what lets a SQL oracle pin a
     convergence-driven result at all.
 
-    Memoized per (session, sf_dir) like ``derived_graph``: the
-    converged relation is a pure function of the overlay and its loop
-    runs eagerly (one action per round), so a consumer such as
-    ``top_pages_by_rank`` must not replay the whole orbit. The result
-    is already round-checkpointed; the memo stores the final relation.
+    A session memo like ``derived_graph``: the converged relation is a
+    pure function of the overlay and its loop runs eagerly (one action
+    per round), so a consumer such as ``top_pages_by_rank`` must not
+    replay the whole orbit. The result is already round-checkpointed;
+    the memo stores the final relation.
     """
     from ophois_spark.operators.webgraph import pagerank_converged
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAGERANK_CACHE:
-        _PAGERANK_CACHE.clear()
-        nodes, edges = _link_overlay(spark, sf_dir)
-        r, _rounds = pagerank_converged(nodes, edges)
-        _PAGERANK_CACHE[key] = r.select(
-            F.col("id").cast("long").alias("doc_id"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    return _PAGERANK_CACHE[key]
+    nodes, edges = _link_overlay(spark, sf_dir)
+    r, _rounds = pagerank_converged(nodes, edges)
+    return r.select(
+        F.col("id").cast("long").alias("doc_id"),
+        F.col("rank").cast("long").alias("rank"),
+    )
 
 
 TOP_PAGES_N = 25
@@ -5997,20 +5962,14 @@ ORACLES.update({"stays_by_region": SQL_STAYS_BY_REGION})
 # ---------------------------------------------------------------------------
 
 
-_BPE_MEMO: dict = {}
-
-
+@session_memo()
 def _trained_merges(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str]]:
-    """Single-entry memo per (session, sf_dir) — bpe_merges and
-    bpe_token_counts both consume the trained table; without the memo
-    each replays the 12-round driver loop (_GRAPH_CACHE policy)."""
+    """Session memo — bpe_merges and bpe_token_counts both consume the
+    trained table; without the memo each replays the 12-round driver
+    loop."""
     from ophois_spark.operators.bpe import BPE_MERGES, bpe_train
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BPE_MEMO:
-        _BPE_MEMO.clear()
-        _BPE_MEMO[key] = bpe_train(load(spark, sf_dir, "documents"), n_merges=BPE_MERGES)
-    return _BPE_MEMO[key]
+    return bpe_train(load(spark, sf_dir, "documents"), n_merges=BPE_MERGES)
 
 
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6536,7 +6495,8 @@ ORACLES.update({"term_cooccurrence": SQL_TERM_COOCCURRENCE})
 def q_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton layout keys for the derived nodes at res = ZORDER_BITS —
     the write-side clustering key of the cell-clustered layout
-    (bench_layout.py reads; this is the exact-bit projection gate)."""
+    (measured in BENCH/BASELINE.md, "Cell-clustered layout A/B"; this is
+    the exact-bit projection gate)."""
     from ophois_spark.operators.spatial import ZORDER_BITS, zorder_cells
 
     return zorder_cells(derived_nodes(spark, sf_dir), res=ZORDER_BITS)
@@ -7616,26 +7576,14 @@ scc AS MATERIALIZED (
 sizes AS (SELECT scc, COUNT(*) AS scc_size FROM scc GROUP BY scc)"""
 
 
-_SCC_CACHE: dict = {}
-
-
+@session_memo(produces="site_scc")
 def _site_scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized per (session, sf_dir): the peeling loop runs once; both
-    site_scc and web_bowtie consume the labels. Single-entry cache,
-    same eviction policy as _component_labels."""
+    """Session memo: the peeling loop runs once; site_scc, web_bowtie
+    and scc_dag_edges consume the labels."""
     from ophois_spark.operators.scc import strongly_connected_components
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SCC_CACHE:
-        _SCC_CACHE.clear()
-        nodes, edges = _site_graph(spark, sf_dir)
-        _SCC_CACHE[key] = strongly_connected_components(nodes, edges).localCheckpoint(
-            eager=True
-        )
-    return _SCC_CACHE[key]
-
-
-MEMO_RESETS["site_scc"] = _SCC_CACHE.clear
+    nodes, edges = _site_graph(spark, sf_dir)
+    return strongly_connected_components(nodes, edges).localCheckpoint(eager=True)
 
 
 def q_site_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7807,9 +7755,9 @@ def q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation plus one algebraic struct-min per walker. Hot nodes
     (celebrity pages) concentrate walkers — the join is still a plain
     shuffle join and AQE's skew split handles the hot partitions, the
-    same story bench_skew.py measures for the cell joins. Step count
-    is a static unroll (no fixpoint, no driver actions), so the whole
-    walk corpus is ONE job."""
+    same story BENCH/BASELINE.md's skew evidence measures for the cell
+    joins. Step count is a static unroll (no fixpoint, no driver
+    actions), so the whole walk corpus is ONE job."""
     sites, edges = _site_graph(spark, sf_dir)
     frontier = sites.select(
         F.col("id").alias("walk"), F.col("id").alias("node")
@@ -8866,3 +8814,14 @@ def _rotated(order: "dict[str, object]") -> "list[str]":
 _ORDER = _rotated(QUERIES)
 QUERIES = {k: QUERIES[k] for k in _ORDER}
 ORACLES = {k: ORACLES[k] for k in _ORDER if k in ORACLES}
+
+# Benchmark contract for memoized queries: a harness timing a row's OWN
+# work resets the memo that row produces before each measured pass,
+# else a second pass reads the memo and reports a cache hit. Consumers
+# of a memo (top_pages_by_rank, component_size_dist, web_bowtie) stay
+# warm by design.
+MEMO_RESETS = memo_resets()
+# the per-memo stores, by the names perfbench clears between passes
+_GRAPH_CACHE = derived_graph.store
+_LABEL_CACHE = _component_labels.store
+_PAGERANK_CACHE = q_link_pagerank_converged.store

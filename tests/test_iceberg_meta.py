@@ -7,6 +7,9 @@ Iceberg runtime in the sandbox); FIELD names/structure are the spec's.
 import json
 import os
 
+import pytest
+from pyspark.sql import functions as F
+
 from ophois_spark.plans.snapshots import SnapshotLog
 
 # Required top-level v2 table-metadata fields, per the published spec.
@@ -160,3 +163,28 @@ def test_manifest_list_and_manifest_row_counts_match_data(spark, tmp_path):
     # and the data files are REAL: spark can read them back
     paths = [e["data_file"]["file_path"] for e in manifest]
     assert spark.read.parquet(*paths).count() == 50
+
+
+def test_retried_commit_after_crash_keeps_ancestry_unique(spark, tmp_path):
+    """A commit whose second table's write raises, then retried: the first
+    table was already published under the snapshot id the retry reuses."""
+    log = SnapshotLog(str(tmp_path / "snap"))
+    good = spark.range(10).selectExpr("id", "cast(id as string) AS s")
+    log.commit("stage_a", {"a": good, "b": good})
+    bad = good.select("id", F.when(F.col("id") >= 0, F.raise_error(F.lit("injected"))).alias("s"))
+    with pytest.raises(Exception, match="injected"):
+        log.commit("stage_b", {"a": good, "b": bad})
+    meta = log.commit("stage_b", {"a": good, "b": good})
+
+    assert [m["id"] for m in log.snapshots()] == [1, 2]
+    for name in ("a", "b"):
+        mdir = meta["tables"][name]["iceberg_metadata"]
+        latest = sorted(n for n in os.listdir(mdir) if n.endswith(".metadata.json"))[-1]
+        with open(os.path.join(mdir, latest)) as f:
+            tm = json.load(f)
+        ids = [s["snapshot-id"] for s in tm["snapshots"]]
+        assert ids == [1, 2], (name, ids)
+        assert all(s["parent-snapshot-id"] != s["snapshot-id"] for s in tm["snapshots"])
+        assert tm["snapshots"][1]["parent-snapshot-id"] == 1
+        assert [e["snapshot-id"] for e in tm["snapshot-log"]] == ids
+        assert tm["current-snapshot-id"] == meta["tables"][name]["iceberg_snapshot_id"] == 2

@@ -279,3 +279,47 @@ def test_fan_out_gate_is_size_aware(spark, tmp_path):
     assert _planned_splits(df.groupBy("text").count()) == int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
+
+
+def test_session_memos_share_one_registry_and_reset(spark):
+    from ophois_spark import queries
+    from ophois_spark.plans import cache
+
+    registered = list(cache.MEMOS)
+    in_queries = [v for v in vars(queries).values() if isinstance(v, cache.SessionMemo)]
+    assert len(in_queries) == 5 and all(m in registered for m in in_queries)
+    assert set(queries.MEMO_RESETS) == {"component_labels", "site_scc", "link_pagerank_converged"}
+    for name, reset in queries.MEMO_RESETS.items():
+        assert any(m.produces == name and reset == m.reset for m in in_queries)
+
+    # every memo is cleared by its row's reset or by the registry reset
+    for m in registered:
+        m.store[("app", "sf")] = object()
+    for reset in queries.MEMO_RESETS.values():
+        reset()
+    for m in registered:
+        if m.produces:
+            assert not m.store, m.__name__
+    for m in registered:
+        m.reset()
+    assert all(not m.store for m in registered)
+
+    # a second call hits; a reset makes the next call miss; a new key evicts
+    builds = []
+    memo = cache.session_memo()(lambda spark, sf_dir: builds.append(sf_dir) or len(builds))
+    assert memo(spark, "a") == 1 and memo(spark, "a") == 1
+    assert (memo.misses, memo.hits) == (1, 1)
+    memo.reset()
+    assert memo(spark, "a") == 2 and memo.misses == 2
+    assert memo(spark, "b") == 3 and list(memo.store) == [(spark.sparkContext.applicationId, "b")]
+
+
+def test_clearing_graph_store_forces_rebuild(spark):
+    from ophois_spark import queries
+
+    g1 = queries.derived_graph(spark, SF)
+    misses = queries.derived_graph.misses
+    assert queries.derived_graph(spark, SF) is g1
+    queries._GRAPH_CACHE.clear()
+    g2 = queries.derived_graph(spark, SF)
+    assert g2 is not g1 and queries.derived_graph.misses == misses + 1

@@ -1,10 +1,9 @@
-"""Spatial layer tests: salted dedup, PIP, kNN, tiles."""
+"""Spatial layer tests: same-cell pairs, PIP, kNN, tiles."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from ophois_spark.operators.spatial import (
-    coord_dedup_salted,
     knn_bruteforce,
     knn_join,
     point_in_polygon,
@@ -13,24 +12,9 @@ from ophois_spark.operators.spatial import (
     same_cell_pairs,
     tile_assignment,
 )
-from ophois_spark.queries import derived_graph, derived_nodes
+from ophois_spark.queries import derived_graph
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_coord_dedup_salted_equals_plain(spark):
-    nodes = derived_nodes(spark, SF)
-    salted = coord_dedup_salted(nodes, 18, n_salt=8)
-    plain = (
-        nodes.withColumn("cell", F.lit(None))
-        .groupBy("lat_d", "lon_d")
-        .agg(F.min("id").alias("rep_id"), F.count(F.lit(1)).alias("n_dup"))
-    )
-    a = sorted(
-        (r["lat_d"], r["lon_d"], r["rep_id"], r["n_dup"]) for r in salted.collect()
-    )
-    b = sorted((r["lat_d"], r["lon_d"], r["rep_id"], r["n_dup"]) for r in plain.collect())
-    assert a == b
 
 
 def test_same_cell_pairs(spark):
