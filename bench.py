@@ -279,8 +279,9 @@ def main() -> None:
     n_exact = exact.count()
     # train the k-means quantizer ONCE (pure function of the corpus;
     # nprobe only affects probing) and time it as its own entry — the
-    # Lloyd loop runs eagerly, so per-variant retraining would both
-    # triple the cost and hide it outside the recall timers
+    # assignment checkpoint below materializes the Lloyd rounds inside
+    # this timer, so per-variant retraining would both triple the cost
+    # and hide it outside the recall timers
     t0 = time.perf_counter()
     km_cents = ivf_centroids_kmeans(emb)
     km_assign = ivf_assign(emb, km_cents).localCheckpoint(eager=True)

@@ -55,18 +55,6 @@ def cli_download(city: str, grid: int = 12) -> str:
     return page_xml(h % 7, (h // 7) % 7, grid)
 
 
-def _graph_from_lines(spark, lines: list[str], separator: str):
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from ophois_spark.sources.graph_io import parse_records
-
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(lines)], "seq long, line string"
-    )
-    g, _ = parse_records(df, ["seq"], separator=separator)
-    return g
-
-
 def _param(prefix: str, delta: float) -> str:
     # the reference formats the metrics param with Rust {}: 10.0 → "10"
     from ophois_spark.kernels.floatfmt import format_f64
@@ -80,9 +68,9 @@ def cli_simplify(
 ) -> list[str]:
     from ophois_spark.operators.metrics import write_metrics
     from ophois_spark.pipeline import simplify
-    from ophois_spark.sources.graph_io import show_records
+    from ophois_spark.sources.graph_io import graph_from_lines, show_records
 
-    g, _ = simplify(spark, _graph_from_lines(spark, lines, separator), delta)
+    g, _ = simplify(spark, graph_from_lines(spark, lines, separator), delta)
     write_metrics(g, _param("simplify", delta), metrics_dir)
     return [r["line"] for r in show_records(g, separator).collect()]
 
@@ -93,11 +81,9 @@ def cli_discretize(
 ) -> list[str]:
     from ophois_spark.operators.metrics import write_metrics
     from ophois_spark.pipeline import discretize_pipeline
-    from ophois_spark.sources.graph_io import show_records
+    from ophois_spark.sources.graph_io import graph_from_lines, show_records
 
-    g, _ = discretize_pipeline(
-        spark, _graph_from_lines(spark, lines, separator), delta
-    )
+    g, _ = discretize_pipeline(spark, graph_from_lines(spark, lines, separator), delta)
     write_metrics(g, _param("discretize", delta), metrics_dir)
     return [r["line"] for r in show_records(g, separator).collect()]
 

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ophois_spark.plans.fixpoint import fixpoint
+
 N_PLANES = 8
 
 
@@ -248,7 +250,8 @@ def ivf_centroids_kmeans(
         return ivf_centroids(embeddings, n_centroids, id_col)
     dim = len(head["v"])
     cents = ivf_centroids(embeddings, n_centroids, id_col).localCheckpoint(eager=True)
-    for _ in range(n_iter):
+
+    def _lloyd(cents: DataFrame, cut) -> DataFrame:
         assign = ivf_assign(base.withColumnRenamed("v", "embedding"), cents)
         means = (
             base.join(assign, "vec_id")
@@ -256,11 +259,11 @@ def ivf_centroids_kmeans(
             .agg(*[F.avg(F.col("v")[i]).alias(f"m{i}") for i in range(dim)])
             .select("cid", F.array(*[F.col(f"m{i}") for i in range(dim)]).alias("mv"))
         )
-        cents = (
-            cents.join(means, "cid", "left")
-            .select("cid", F.coalesce("mv", "cv").alias("cv"))
-            .localCheckpoint(eager=True)
+        return cents.join(means, "cid", "left").select(
+            "cid", F.coalesce("mv", "cv").alias("cv")
         )
+
+    cents, _ = fixpoint("ivf_centroids_kmeans", cents, _lloyd, rounds=n_iter)
     return cents
 
 

@@ -27,6 +27,7 @@ ring radius per round so the number of driver iterations is logarithmic.
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -41,6 +42,7 @@ from ophois_spark.functions import (
     haversine_m,
 )
 from ophois_spark.kernels.geo import EARTH_RADIUS_M
+from ophois_spark.plans.fixpoint import empty, fixpoint
 
 M_PER_DEG = EARTH_RADIUS_M * math.pi / 180.0
 
@@ -159,13 +161,10 @@ def cell_compact(cells: DataFrame, res: int, min_res: int) -> DataFrame:
     keys (parents) are as granular as the data, no hot key possible
     (a parent has ≤ 4 children by construction).
     """
-    from functools import reduce
-
     out_parts = []
-    # cur feeds two branches per round (the completeness count and the
-    # incomplete-children anti-join) — truncate per level
-    cur = cells.select("cell").distinct().localCheckpoint(eager=False)
-    for r in range(res, min_res, -1):
+
+    def _level(state, cut):
+        cur, r = state
         parent = cell_parent_expr(F.col("cell"), r).alias("parent")
         grp = cur.select("cell", parent).groupBy("parent").agg(
             F.count(F.lit(1)).alias("n_children")
@@ -176,11 +175,14 @@ def cell_compact(cells: DataFrame, res: int, min_res: int) -> DataFrame:
             .join(full, "parent", "left_anti")
             .select("cell")
         )
-        cur = full.select(F.col("parent").alias("cell")).localCheckpoint(
-            eager=False
-        )
-    out_parts.append(cur)
-    return reduce(DataFrame.unionByName, out_parts)
+        return full.select(F.col("parent").alias("cell")), r - 1
+
+    # each level's cells feed two branches (the completeness count and
+    # the incomplete-children anti-join): the start level is cut here,
+    # every later one by the driver
+    start = cells.select("cell").distinct().localCheckpoint(eager=False)
+    (cur, _), _ = fixpoint("cell_compact", (start, res), _level, rounds=res - min_res)
+    return reduce(DataFrame.unionByName, out_parts + [cur])
 
 
 # ---------------------------------------------------------------------------
@@ -437,9 +439,12 @@ def knn_join(
     ).withColumns({"qix": qix.cast("long"), "qiy": qiy.cast("long")})
 
     results = []
-    carry = None  # previous round's top-k rows for still-pending queries
-    r, r_prev = 1, -1  # round 1's "annulus" includes the centre cell (Chebyshev 0)
-    while r <= max_ring:
+
+    def _round(state, cut):
+        # top: the previous round's top-k rows; those of still-pending
+        # queries carry into this round's ranking
+        pending, top, r = state
+        r_prev = r // 2 if r > 1 else -1  # round 1's "annulus" includes the centre cell
         # wrap x, clamp-filter y; dedup (qid, cell): when 2r+1 > n the
         # modulo maps distinct dx onto the same column — without the
         # dedup a node would join (and rank) multiple times per query.
@@ -464,14 +469,17 @@ def knn_join(
             )
             .select("qid", "q_lat", "id", "dist_m")
         )
-        if carry is not None:
+        if top is not None:
+            carry = top.join(pending, "qid", "left_semi").select("qid", "q_lat", "id", "dist_m")
             # (qid, id) dedup: under modulo wrap an annulus (dx, dy) can
             # alias a cell already visited in an earlier round — the same
             # node must not occupy two ranks (values are identical, any
             # survivor is fine)
             cand = cand.unionByName(carry).dropDuplicates(["qid", "id"])
         w = Window.partitionBy("qid").orderBy(F.round("dist_m", 6), "id")
-        topk = (
+        # the stop action, this round's output part and the next
+        # round's carry all read topk
+        topk = cut(
             cand.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("qid", "q_lat", "rank", "id", "dist_m")
@@ -496,18 +504,15 @@ def knn_join(
         results.append(
             topk.join(resolved_q, "qid", "left_semi").select("qid", "rank", "id", "dist_m")
         )
-        pending = pending.join(resolved_q, "qid", "left_anti").localCheckpoint(eager=True)
-        if pending.isEmpty():
-            pending = None
-            break
-        carry = (
-            topk.join(resolved_q, "qid", "left_anti")
-            .select("qid", "q_lat", "id", "dist_m")
-            .localCheckpoint(eager=True)
-        )
-        r_prev, r = r, r * 2
+        return pending.join(resolved_q, "qid", "left_anti"), topk, 2 * r
 
-    if pending is not None and not pending.isEmpty():
+    # ring radii 1, 2, 4, … up to max_ring
+    budget = max(max_ring, 0).bit_length()
+    (pending, _, _), rounds = fixpoint(
+        "knn_join", (pending, None, 1), _round, stop=empty(of=0), rounds=budget
+    )
+    # a stop before the budget proved every query resolved
+    if rounds == budget and not pending.isEmpty():
         # exact brute-force fallback for stragglers (sparse regions)
         cand = pending.crossJoin(nodes_c.drop("cell")).withColumn(
             "dist_m",
@@ -520,10 +525,7 @@ def knn_join(
             .select("qid", "rank", "id", "dist_m")
         )
 
-    out = results[0]
-    for more in results[1:]:
-        out = out.unionByName(more)
-    return out
+    return reduce(DataFrame.unionByName, results)
 
 
 def knn_bruteforce(nodes: DataFrame, queries: DataFrame, k: int, query_id: str = "qid") -> DataFrame:

@@ -1,7 +1,7 @@
 """Iceberg-v2-shaped table metadata for the snapshot layer.
 
 plans/snapshots.py keeps the engine's operational log (stage names,
-resume pointers, per-partition lineage). This module additionally
+resume pointers, per-file lineage). This module additionally
 emits, per committed table, the PUBLIC Apache Iceberg v2 table-spec
 metadata structure (https://iceberg.apache.org/spec/ — "Table
 Metadata" fields, format-version 2), so the layout is externally
@@ -128,7 +128,7 @@ def schema_json(schema: T.StructType, schema_id: int = 0) -> tuple[dict, int]:
     )
 
 
-def _parquet_files(data_path: str) -> list[tuple[str, int, int]]:
+def parquet_files(data_path: str) -> list[tuple[str, int, int]]:
     """[(path, file_size_bytes, record_count)] from the REAL footers."""
     import pyarrow.parquet as pq
 
@@ -161,10 +161,13 @@ class IcebergTableMeta:
         with open(os.path.join(self.meta_dir, vs[-1])) as f:
             return json.load(f)
 
-    def append_snapshot(self, snapshot_id: int, data_path: str, schema: T.StructType) -> dict:
-        """Record one append snapshot over the parquet files at
-        ``data_path``; writes manifest, manifest list, and the next
-        v{N}.metadata.json. Returns the new table metadata.
+    def append_snapshot(
+        self, snapshot_id: int, files: list[tuple[str, int, int]], schema: T.StructType
+    ) -> dict:
+        """Record one append snapshot over the parquet ``files``
+        (``parquet_files`` of the data directory); writes manifest,
+        manifest list, and the next v{N}.metadata.json. Returns the new
+        table metadata.
 
         Idempotent per ``snapshot_id``: a snapshot already recorded
         under this id (a commit that failed on a later table and is
@@ -174,7 +177,6 @@ class IcebergTableMeta:
         prev = self.current()
         history = prev["snapshots"] if prev else []
         retried = next((s for s in history if s["snapshot-id"] == snapshot_id), None)
-        files = _parquet_files(data_path)
         added_rows = sum(rc for _, _, rc in files)
 
         manifest_path = os.path.join(self.meta_dir, f"manifest-{snapshot_id}.json")

@@ -3,17 +3,20 @@
 No Iceberg jars exist in the sandbox, so the engine implements the
 part of the spec the north_rule needs — atomically committed,
 append-only snapshot metadata over immutable parquet data files, with
-per-partition row-count lineage — as a ~150-line layer:
+per-file row-count lineage — as a ~150-line layer:
 
     <root>/metadata/v{N}.json      one per committed snapshot
     <root>/data/s{N}/{table}/      immutable parquet per snapshot/table
 
 A snapshot records: monotonically increasing id, stage name, parent
-snapshot id (ancestry), per-table paths + row counts + per-partition
-row counts (lineage), and caller metrics. Commit is atomic: data is
-fully written first, then the metadata json is renamed into place —
-a reader never observes a half-commit, and resume = read the highest
-committed v{N}.json (the Iceberg "current snapshot" pointer analogue).
+snapshot id (ancestry), per-table paths + row counts + per-file row
+counts (lineage), and caller metrics. Both counts come from the
+written parquet files' footers, with no Spark job:
+``partition_row_counts`` has one entry per written file, i.e. per
+write task. Commit is atomic: data is fully written first, then the
+metadata json is renamed into place — a reader never observes a
+half-commit, and resume = read the highest committed v{N}.json (the
+Iceberg "current snapshot" pointer analogue).
 
 On a real cluster this maps 1:1 onto Iceberg snapshots
 (``writeTo(...).createOrReplace`` + snapshot ancestry); the engine
@@ -28,16 +31,6 @@ import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def _partition_counts(df: DataFrame) -> list[int]:
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    return [r["n"] for r in sorted(rows, key=lambda r: r["pid"])]
 
 
 class SnapshotLog:
@@ -74,7 +67,7 @@ class SnapshotLog:
         self, stage: str, tables: dict[str, DataFrame], metrics: dict | None = None
     ) -> dict:
         """Write all tables as parquet, then atomically publish metadata."""
-        from ophois_spark.plans.iceberg_meta import IcebergTableMeta
+        from ophois_spark.plans.iceberg_meta import IcebergTableMeta, parquet_files
 
         prev = self.latest()
         sid = (prev["id"] + 1) if prev else 1
@@ -82,17 +75,17 @@ class SnapshotLog:
         for name, df in tables.items():
             path = os.path.join(self.root, "data", f"s{sid}", name)
             df.write.mode("overwrite").parquet(path)
-            written = df.sparkSession.read.parquet(path)
-            pc = _partition_counts(written)
+            files = parquet_files(path)
+            pc = [rc for _, _, rc in files]
             # also publish the public Iceberg-v2-shaped metadata tree for
             # this table (append snapshot over the files just written) —
             # see plans/iceberg_meta.py for the conformance contract
             ice = IcebergTableMeta(
                 os.path.join(self.root, "iceberg", name), name
-            ).append_snapshot(sid, path, written.schema)
+            ).append_snapshot(sid, files, df.schema)
             table_meta[name] = {
                 "path": path,
-                "row_count": int(sum(pc)),
+                "row_count": sum(pc),
                 "partition_row_counts": pc,
                 "iceberg_metadata": os.path.join(
                     self.root, "iceberg", name, "metadata"
@@ -117,7 +110,6 @@ class SnapshotLog:
         spark: SparkSession,
         stage: str,
         fn: Callable[[], dict[str, DataFrame]],
-        metrics_fn: Callable[[dict[str, DataFrame]], dict] | None = None,
     ) -> dict[str, DataFrame]:
         """Resume-or-run: reuse a committed snapshot for ``stage`` if one
         exists (checkpoint recovery), else compute, commit, and return
@@ -125,7 +117,5 @@ class SnapshotLog:
         existing = self.find_stage(stage)
         if existing is not None:
             return self.load_tables(spark, existing)
-        tables = fn()
-        metrics = metrics_fn(tables) if metrics_fn else {}
-        meta = self.commit(stage, tables, metrics)
+        meta = self.commit(stage, fn())
         return self.load_tables(spark, meta)

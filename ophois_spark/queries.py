@@ -1766,12 +1766,13 @@ def q_simplify_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-cached labels: the propagation runs once per (session, sf)
     # across the registry; the operator owns the winner/filter semantics
     g = largest_component(g, labels=_component_labels(spark, sf_dir))
-    # stage-boundary cuts: each contraction stage reads its input graph
+    # stage-boundary cut: the degree-2 stage reads its input graph
     # through several independent consumers; without the checkpoint the
     # previous stages' join lineage replays per consumer (~30% of the
-    # pipeline's wall time measured at sf0.1)
+    # pipeline's wall time measured at sf0.1). remove_under_delta_nodes
+    # cuts its own input.
     g = remove_degree_two_nodes(g.checkpoint())
-    g = remove_under_delta_nodes(g.checkpoint(), SIMPLIFY_DELTA)
+    g = remove_under_delta_nodes(g, SIMPLIFY_DELTA)
     g = remove_under_delta_links(g, SIMPLIFY_DELTA)
     return g.nodes.select("id", "lat", "lon")
 

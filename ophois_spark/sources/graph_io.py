@@ -128,18 +128,26 @@ def parse_records(
     return StreetGraph(nodes, edges), metrics
 
 
+def graph_from_lines(
+    spark: SparkSession, lines: list[str], separator: str = SEPARATOR
+) -> StreetGraph:
+    """Build a StreetGraph from record lines in input order (load semantics)."""
+    df = spark.createDataFrame(
+        [(i, s) for i, s in enumerate(lines)], "seq long, line string"
+    )
+    g, _ = parse_records(df, ["seq"], separator=separator)
+    return g
+
+
 def graph_from_tuples(
     spark: SparkSession,
     nodes: list[tuple[str, str, str]],
     links: list[tuple[str, str]],
 ) -> StreetGraph:
     """Build a StreetGraph from fixture tuples (test helper; load semantics)."""
-    lines = [SEPARATOR.join(n) for n in nodes] + [SEPARATOR.join(e) for e in links]
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(lines)], "seq long, line string"
+    return graph_from_lines(
+        spark, [SEPARATOR.join(n) for n in nodes] + [SEPARATOR.join(e) for e in links]
     )
-    g, _ = parse_records(df, ["seq"])
-    return g
 
 
 def show_records(g: StreetGraph, separator: str = SEPARATOR) -> DataFrame:

@@ -110,7 +110,6 @@ def stream_graph_snapshots(
     lang: str | None = "en",
     available_now: bool = True,
     on_batch: Callable[[int, dict], None] | None = None,
-    allow_legacy_ledger: bool = False,
 ):
     """Micro-batch ingest committing an Iceberg-style snapshot per batch.
 
@@ -148,18 +147,14 @@ def stream_graph_snapshots(
         # ``stream_batch_{id}`` ledger entries whose original checkpoint
         # is unknowable. Honoring them from an arbitrary checkpoint is
         # exactly the aliasing content-keying prevents (fresh checkpoints
-        # restart ids at 0 and silently skip new batches), so refuse
-        # unless the caller explicitly opts in to the legacy semantics.
-        legacy_pat = re.compile(r"^stream_batch_\d+$")
-        has_legacy = any(legacy_pat.match(m["stage"]) for m in log.snapshots())
-        if has_legacy and not allow_legacy_ledger:
+        # restart ids at 0 and silently skip new batches), so refuse.
+        if any(re.fullmatch(r"stream_batch_\d+", m["stage"]) for m in log.snapshots()):
             raise ValueError(
                 f"snapshot root {snapshot_root} holds legacy id-only "
                 "stream_batch_* ledger entries with no checkpoint marker; "
                 "resuming it from an arbitrary checkpoint could silently "
-                "skip batches whose ids alias old commits. Pass "
-                "allow_legacy_ledger=True only if this checkpoint is the "
-                "root's original one; otherwise use a fresh snapshot root."
+                "skip batches whose ids alias old commits — use a fresh "
+                "snapshot root."
             )
         log.commit("stream_source", {}, {"checkpoint_dir": ckpt_real})
     pages = read_page_stream(spark, input_dir)
@@ -186,13 +181,7 @@ def stream_graph_snapshots(
             else "nofiles"
         )
         stage = f"stream_batch_{batch_id}_{sig}"
-        # legacy ledgers (pre-content-keying) committed as
-        # "stream_batch_{id}"; those keys are only honored when the
-        # caller vouched for the checkpoint via allow_legacy_ledger —
-        # otherwise the start-up refusal above already rejected the root
         existing = log.find_stage(stage)
-        if existing is None and allow_legacy_ledger:
-            existing = log.find_stage(f"stream_batch_{batch_id}")
         if existing is not None:
             if on_batch is not None:
                 on_batch(batch_id, existing)

@@ -1,6 +1,6 @@
 """st_cube_rollup / choropleth_classes / cell_majority unit contracts.
 
-The oracle gate (tools/preflight_correctness.py) checks full-value
+The oracle gate (tools/driver_gate_replica.py) checks full-value
 parity vs DuckDB; these tests pin the semantic invariants on crafted
 inputs where the expected values are hand-checkable.
 """

@@ -1,6 +1,6 @@
 """plans.fixpoint: the one driver every iterative operator runs on —
 round cap, bounded lineage, bounded plan estimates, and a lexical
-guard that no migrated operator cuts lineage inside its own loop."""
+guard that no other module of the package cuts lineage inside a loop."""
 
 import ast
 import pathlib
@@ -11,17 +11,8 @@ from pyspark.sql import functions as F
 
 from ophois_spark.plans.fixpoint import changed, fixpoint
 
-_MIGRATED = [
-    "components",
-    "webgraph",
-    "scc",
-    "contraction",
-    "mst",
-    "bpe",
-    "polyline",
-    "routing",
-]
-_OPERATORS = pathlib.Path(__file__).resolve().parents[1] / "ophois_spark" / "operators"
+_PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "ophois_spark"
+_DRIVER = _PACKAGE / "plans" / "fixpoint.py"
 
 
 def _size_digits(df) -> int:
@@ -123,11 +114,11 @@ def _cuts_inside_loops(tree: ast.AST) -> list[int]:
 def test_no_operator_cuts_lineage_inside_its_own_loop():
     """Round loops cut lineage only through plans.fixpoint: a
     ``localCheckpoint`` or ``stats_barrier`` lexically inside a ``for``
-    or ``while`` body of a migrated operator module fails."""
+    or ``while`` body of any other module of the package fails."""
     found = {
-        mod: lines
-        for mod in _MIGRATED
-        if (lines := _cuts_inside_loops(ast.parse((_OPERATORS / f"{mod}.py").read_text())))
+        str(path.relative_to(_PACKAGE)): lines
+        for path in sorted(_PACKAGE.rglob("*.py"))
+        if path != _DRIVER and (lines := _cuts_inside_loops(ast.parse(path.read_text())))
     }
     assert found == {}
 

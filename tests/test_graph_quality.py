@@ -1,6 +1,6 @@
 """Clustering coefficient + bearing histogram + in-doc repetition,
 pinned on hand inputs (the sf0.01 oracle gate lives in
-test_oracle_parity / preflight)."""
+test_oracle_parity / tools/driver_gate_replica.py)."""
 
 import math
 

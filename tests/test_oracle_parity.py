@@ -1,22 +1,18 @@
 """Local replica of the driver's DuckDB-oracle correctness gate.
 
-Runs every queries()/oracle_sql() pair at sf0.001 and compares
-row counts, column names, and order-insensitive values.
+Runs every queries()/oracle_sql() pair at sf0.001 through the gate's
+one comparison (tools/driver_gate_replica.mismatch): column names, row
+count, and order-insensitive values with NaN equal to NaN.
 """
 
 import os
 
-import duckdb
-import pandas as pd
 import pytest
 
 from ophois_spark.queries import ORACLES, QUERIES
+from tools.driver_gate_replica import duck, mismatch
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 pytestmark = [
     pytest.mark.slow,  # full-registry sweep: one Spark+DuckDB round per query
@@ -26,33 +22,9 @@ pytestmark = [
 ]
 
 
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
-
-
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)]
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, name):
-    if name not in ORACLES:
-        # rows-only contract (non-SQL-expressible fixpoint operators):
-        # must run and return a non-empty, stable-schema result
-        df = QUERIES[name](spark, SF_DIR)
-        assert df.count() > 0 and df.columns
-        return
-    got = normalize(QUERIES[name](spark, SF_DIR).toPandas())
-    con = duck()
-    want = normalize(con.sql(ORACLES[name]).df())
-    assert list(got.columns) == list(want.columns), (got.columns, want.columns)
-    assert len(got) == len(want), f"row count {len(got)} != {len(want)}"
-    for c in got.columns:
-        a, b = got[c].tolist(), want[c].tolist()
-        assert a == b, f"column {c} differs: {a[:5]} vs {b[:5]}"
+    got = QUERIES[name](spark, SF_DIR).toPandas()
+    with duck(SF_DIR) as con:
+        why = mismatch(got, con.sql(ORACLES[name]).df())
+    assert why is None, why

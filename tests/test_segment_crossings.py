@@ -2,7 +2,7 @@
 dedup invariants (operators/spatial.py). The geometric complement of the
 reference's shared-node intersection model (src/graph.rs splits ways
 only at coinciding node ids); registry parity vs the DuckDB oracle is
-covered by test_oracle_parity / tools/preflight_correctness.py."""
+covered by test_oracle_parity / tools/driver_gate_replica.py."""
 
 import pytest
 from pyspark.sql import functions as F

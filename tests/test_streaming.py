@@ -119,25 +119,15 @@ def test_stream_snapshot_replay_is_idempotent(spark, pages_dir, tmp_path):
 
 def test_legacy_id_only_ledger_is_refused(spark, pages_dir, tmp_path):
     """A pre-marker snapshot root holding id-only stream_batch_* entries
-    can't prove which checkpoint minted those ids: resuming it from an
-    arbitrary checkpoint is refused unless explicitly opted in (a fresh
-    checkpoint restarts ids at 0 and would silently skip new batches)."""
+    can't prove which checkpoint minted those ids: resuming it from any
+    checkpoint is refused (a fresh checkpoint restarts ids at 0 and
+    would silently skip new batches)."""
     root = str(tmp_path / "legacy_root")
     log = SnapshotLog(root)
     log.commit("stream_batch_0", {}, {})  # legacy id-only ledger entry
 
     with pytest.raises(ValueError, match="legacy id-only"):
         stream_graph_snapshots(spark, pages_dir, root, str(tmp_path / "ck_l"))
-
-    # explicit opt-in honors the legacy key: batch 0 (same id) is
-    # treated as already committed, later batches commit content-keyed
-    q = stream_graph_snapshots(
-        spark, pages_dir, root, str(tmp_path / "ck_l"), allow_legacy_ledger=True
-    )
-    q.awaitTermination(120)
-    stages = [m["stage"] for m in SnapshotLog(root).snapshots()]
-    assert stages.count("stream_batch_0") == 1  # not re-committed
-    assert any(s == "stream_source" for s in stages)  # marker now bound
 
 
 def test_stream_snapshot_per_batch(spark, pages_dir, tmp_path):
